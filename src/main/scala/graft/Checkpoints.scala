@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** Adaptive storage level for corpus-scaled `localCheckpoint` pins.
@@ -59,18 +60,15 @@ object Checkpoints {
   def pin(df: DataFrame, estBytes: Long): DataFrame =
     df.localCheckpoint(true, adaptiveLevel(estBytes))
 
-  /** AQE's advisory post-shuffle partition size (the default 64 MB):
-    * a frame whose serialized estimate is below parallelism × this
-    * will be coalesced to fewer blocks than cores. */
-  private val AdvisoryBlockBytes = 64L * 1024 * 1024
-
   /** [[pin]] with a width floor, decided from the ESTIMATE in ONE
     * materialization (r20 optimization round — replaces r19's
     * measure-then-re-pin form): when the estimate says AQE will
     * coalesce the frame below the session parallelism
-    * (estBytes < parallelism × 64 MB advisory), round-robin it to the
-    * parallelism BEFORE the single checkpoint — the exchange is
-    * bounded by parallelism × 64 MB, and downstream fan-out consumers
+    * (estBytes < parallelism × the session's AQE advisory partition
+    * size, `spark.sql.adaptive.advisoryPartitionSizeInBytes`, 64 MB by
+    * default), round-robin it to the parallelism BEFORE the single
+    * checkpoint — the exchange is bounded by parallelism × advisory
+    * size, and downstream fan-out consumers
     * (candidate explodes, train/test filters, truth distincts) run
     * wide. Past that bound the frame's own shuffle already
     * materializes ≥ parallelism blocks, so this is [[pin]] — no forced
@@ -84,7 +82,9 @@ object Checkpoints {
     * there is no narrow copy at all. */
   def pinWide(df: DataFrame, estBytes: Long): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (estBytes < par * AdvisoryBlockBytes)
+    val advisory = df.sparkSession.sessionState.conf
+      .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (estBytes < par * advisory)
       df.repartition(par).localCheckpoint(true, adaptiveLevel(estBytes))
     else pin(df, estBytes)
   }

@@ -4,13 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet-backed table loaders for the driver-generated test tables.
   *
-  * Reads are plain `spark.read.parquet` so Catalyst keeps full control of
-  * column pruning and filter pushdown — callers `.select`/`.filter` and the
-  * scan narrows (verify with `.explain`: `ReadSchema`/`PushedFilters`).
+  * Reads go through [[ParquetMeta.read]]: the schema comes from the first
+  * data file's footer on the driver, so building a frame runs no Spark
+  * job. The scan is an ordinary parquet scan, so Catalyst keeps full
+  * control of column pruning and filter pushdown — callers
+  * `.select`/`.filter` and the scan narrows (verify with `.explain`:
+  * `ReadSchema`/`PushedFilters`).
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetMeta.read(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -61,25 +64,18 @@ object Tables {
     * (and only when) it arrives narrower. At real scale the scan is
     * already ≥ parallelism partitions and this is a no-op: no shuffle. */
   private def spread(s: SparkSession, d: String, name: String): DataFrame = {
-    val df = table(s, d, name)
-    // static file-size heuristic, not df.rdd.getNumPartitions: the rdd
-    // call instantiates the physical plan a second time per query; one
-    // filesystem metadata listing answers the same question. The estimate
-    // mirrors FilePartition.maxSplitBytes — min(maxPartitionBytes,
+    // static file-size heuristic over the listing the read already took,
+    // not df.rdd.getNumPartitions: the rdd call instantiates the physical
+    // plan a second time per query. The estimate mirrors
+    // FilePartition.maxSplitBytes — min(maxPartitionBytes,
     // max(openCostInBytes, (bytes + openCost·files)/minPartitionNum)) —
     // with splits rounded up per file, so it tracks the scan's real
     // partition count instead of the old bytes/maxPartitionBytes guess
     // (which could skip a needed repartition on multi-file tables).
-    val path = new org.apache.hadoop.fs.Path(s"$d/$name.parquet")
-    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
-    val root = fs.getFileStatus(path)
-    val fileSizes: Seq[Long] =
-      if (root.isDirectory)
-        fs.listStatus(path).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map(_.getLen)
-      else Seq(root.getLen)
+    val path = s"$d/$name.parquet"
+    val files = ParquetMeta.dataFiles(s, path)
+    val df = ParquetMeta.read(s, files, Seq(path))
+    val fileSizes = files.map(_.getLen)
     val conf = s.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
     val minParts = conf.filesMinPartitionNum

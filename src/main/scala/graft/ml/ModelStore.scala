@@ -130,7 +130,7 @@ object ModelStore {
         if (!marker(p).createNewFile())
           sys.error(s"ModelStore: could not commit marker for $p")
       }
-      spark.read.parquet(data).as[(Int, Int, Seq[Long])].collect()
+      graft.ParquetMeta.read(spark, data).as[(Int, Int, Seq[Long])].collect()
         .sortBy(r => (r._1, r._2)).toSeq
     }
   }
@@ -166,7 +166,7 @@ object ModelStore {
         if (!marker(p).createNewFile())
           sys.error(s"ModelStore: could not commit marker for $p")
       }
-      spark.read.parquet(data)
+      graft.ParquetMeta.read(spark, data)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{ParquetMeta, Tables}
 
 /** Small-file compaction: rewrite a parquet dataset to a target file size
   * — the parquet analogue of the reference's Delta OPTIMIZE/autoCompact
@@ -34,9 +34,9 @@ object Compaction {
               targetFileBytes: Long): DataFrame = {
     val nFiles = math.max(1L, math.ceil(
       dirBytes(spark, inPath).toDouble / targetFileBytes).toLong).toInt
-    spark.read.parquet(inPath).repartition(nFiles)
+    ParquetMeta.read(spark, inPath).repartition(nFiles)
       .write.mode("overwrite").parquet(outPath)
-    spark.read.parquet(outPath)
+    ParquetMeta.read(spark, outPath)
   }
 
   /** Number of data files under `path` (compaction effectiveness probe). */

@@ -322,12 +322,7 @@ object VersionedTable {
     require(dirs.nonEmpty, s"version $version has no live file groups")
     val (dvDirs, dataDirs2) = dirs.partition(isDv)
     require(dataDirs2.nonEmpty, s"version $version has no live data groups")
-    val reader = schemaJson
-      .map(s => spark.read.schema(
-        DataType.fromJson(s).asInstanceOf[StructType]))
-      .getOrElse(spark.read)
-    val base = reader.parquet(
-      dataDirs2.map(d => new Path(dataDir(table), d).toString): _*)
+    val base = readGroups(spark, table, schemaJson, dataDirs2)
     if (dvDirs.isEmpty) base
     else applyDvs(spark, table, withRowIdentity(base), dvDirs)
       .drop(DvFileCol, DvPosCol)
@@ -354,6 +349,19 @@ object VersionedTable {
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, latestVersion(spark, table)
       .getOrElse(sys.error(s"no commits at $table")))
+
+  /** File groups `dirs` of `table` read under the commit log's schema.
+    * A log written before commits carried a schema falls back to the
+    * footer schema ([[graft.ParquetMeta.read]]). */
+  private def readGroups(spark: SparkSession, table: String,
+                         schemaJson: Option[String], dirs: Seq[String]): DataFrame = {
+    val paths = dirs.map(d => new Path(dataDir(table), d).toString)
+    schemaJson match {
+      case Some(s) => spark.read
+        .schema(DataType.fromJson(s).asInstanceOf[StructType]).parquet(paths: _*)
+      case None => graft.ParquetMeta.read(spark, paths: _*)
+    }
+  }
 
   /** Write df as a new immutable file group; returns its dir name. */
   private def writeGroup(spark: SparkSession, table: String, df: DataFrame): String = {
@@ -427,12 +435,8 @@ object VersionedTable {
         require(st.head.nonEmpty, s"no commits at $table")
         val (dvDirs, dataDirs2) = st.live.partition(isDv)
         require(dataDirs2.nonEmpty, s"no live data groups at $table")
-        val reader = st.schemaJson
-          .map(s => spark.read.schema(
-            DataType.fromJson(s).asInstanceOf[StructType]))
-          .getOrElse(spark.read)
-        val scan = withRowIdentity(reader.parquet(
-          dataDirs2.map(d => new Path(dataDir(table), d).toString): _*))
+        val scan = withRowIdentity(
+          readGroups(spark, table, st.schemaJson, dataDirs2))
         // match against LIVE rows only: positions an earlier DV already
         // retired must not reappear in the new vector (keeps per-row
         // delete multiplicity exact for the change feed)
@@ -458,11 +462,6 @@ object VersionedTable {
   private def statsPath(table: String, grp: String) =
     new Path(new Path(dataDir(table), grp), "_key_stats.json")
 
-  /** Write df as a file group AND a `_key_stats.json` sidecar holding
-    * the min/max of `keyCol` — the group is self-describing, so no
-    * commit-log or checkpoint format change is needed and pruning
-    * reads are O(live groups). An empty df writes no stats (reads as
-    * always-overlapping, the safe default). */
   /** Is this a key type the zonemap contract covers (castable to long
     * losslessly)? Non-integral keys simply get no sidecar — unprunable
     * but always correct. */
@@ -473,21 +472,23 @@ object VersionedTable {
       case _ => false
     }
 
+  /** Write df as a file group AND a `_key_stats.json` sidecar holding
+    * the min/max of `keyCol` — the group is self-describing, so no
+    * commit-log or checkpoint format change is needed and pruning
+    * reads are O(live groups). The range comes from the row-group
+    * statistics in the footers just written ([[graft.ParquetMeta.keyRange]]):
+    * driver-side metadata, no scan job, and no re-run of df's plan.
+    * When that range is unknown — an empty group, an all-null key, a
+    * row group without key statistics — no sidecar is written, which
+    * reads as always-overlapping (the safe default). */
   private def writeGroupWithStats(spark: SparkSession, table: String,
                                   df: DataFrame, keyCol: String): String = {
     val name = writeGroup(spark, table, df)
     if (!integralKey(df, keyCol)) return name // no sidecar: unprunable
-    // min/max from the group just written (group-sized scan of its
-    // own parquet footers), not by re-running df's arbitrary plan
-    val mm = spark.read.parquet(new Path(dataDir(table), name).toString)
-      .agg(min(col(keyCol)).cast("long"),
-        max(col(keyCol)).cast("long")).collect()(0)
-    if (!mm.isNullAt(0)) {
-      val f = fs(spark, table)
-      writeAtomic(f, new Path(dataDir(table), name),
-        statsPath(table, name),
-        s"""{"key":${graft.Json.str(keyCol)},""" +
-          s""""min":${mm.getLong(0)},"max":${mm.getLong(1)}}""")
+    val grp = new Path(dataDir(table), name)
+    graft.ParquetMeta.keyRange(spark, grp.toString, keyCol).foreach { case (lo, hi) =>
+      writeAtomic(fs(spark, table), grp, statsPath(table, name),
+        s"""{"key":${graft.Json.str(keyCol)},"min":$lo,"max":$hi}""")
     }
     name
   }
@@ -729,14 +730,9 @@ object VersionedTable {
             case None           => true // unknown stats: must rewrite
           }
         }
-        val reader = st.schemaJson
-          .map(s => spark.read.schema(
-            DataType.fromJson(s).asInstanceOf[StructType]))
-          .getOrElse(spark.read)
         val base = if (overlap.isEmpty) None
           else {
-            val scan = reader.parquet(
-              overlap.map(d => new Path(dataDir(table), d).toString): _*)
+            val scan = readGroups(spark, table, st.schemaJson, overlap)
             Some(if (dvDirs.isEmpty) scan
               else applyDvs(spark, table, withRowIdentity(scan), dvDirs)
                 .drop(DvFileCol, DvPosCol))
@@ -833,14 +829,9 @@ object VersionedTable {
     val after = afterDirs.toSet
     // both sides read under the TO-version schema so exceptAll stays
     // well-typed across schema evolution (old groups surface nulls)
-    val reader = afterSchema
-      .map(s => spark.read.schema(
-        DataType.fromJson(s).asInstanceOf[StructType]))
-      .getOrElse(spark.read)
     def readDirs(dirs: Set[String]): Option[DataFrame] =
       if (dirs.isEmpty) None
-      else Some(reader.parquet(
-        dirs.toSeq.sorted.map(d => new Path(dataDir(table), d).toString): _*))
+      else Some(readGroups(spark, table, afterSchema, dirs.toSeq.sorted))
     val added = readDirs(after -- before)
     val removed = readDirs(before -- after)
     val inserts = (added, removed) match {

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, StructType}
+import graft.ParquetMeta
 import graft.operators.MergeUpsert
 
 /** Streaming merge-upsert sink: every micro-batch is a changeset applied
@@ -57,7 +58,7 @@ object UpsertSink {
   /** The live dimension snapshot (business cols + current_version). */
   def currentState(spark: SparkSession, stateDir: String): Option[DataFrame] =
     currentPointer(stateDir).map { case (v, _) =>
-      spark.read.parquet(s"$stateDir/$v")
+      ParquetMeta.read(spark, s"$stateDir/$v")
     }
 
   /** Apply one micro-batch changeset; public so recovery replays are
@@ -121,14 +122,14 @@ object UpsertSink {
     val v = versionHistory(stateDir).find(_.batchId == batchId)
       .getOrElse(throw new NoSuchElementException(
         s"no committed version $batchId under $stateDir (pruned or never applied)"))
-    spark.read.parquet(s"$stateDir/${v.dir}")
+    ParquetMeta.read(spark, s"$stateDir/${v.dir}")
   }
 
   /** The newest snapshot committed at-or-before `tsMillis`, if any. */
   def stateAsOf(spark: SparkSession, stateDir: String,
                 tsMillis: Long): Option[DataFrame] =
     versionHistory(stateDir).filter(_.commitMillis <= tsMillis)
-      .lastOption.map(v => spark.read.parquet(s"$stateDir/${v.dir}"))
+      .lastOption.map(v => ParquetMeta.read(spark, s"$stateDir/${v.dir}"))
 
   /** Change-data feed between two committed versions: one row per
     * natural key that was inserted, updated, deleted, or unchanged
