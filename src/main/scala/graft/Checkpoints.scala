@@ -1,10 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
-/** Adaptive storage level for corpus-scaled `localCheckpoint` pins.
+/** The pin API: eager `localCheckpoint`s, at a storage level tiered
+  * from a size estimate, or at the default level with the row count
+  * observed in the pin's own job.
   *
   * Spark's default localCheckpoint level keeps deserialized rows on
   * the executor heap — right for the domain-sized frames most graft
@@ -20,16 +23,20 @@ import org.apache.spark.storage.StorageLevel
   * thrashes once storage saturates.
   *
   * Rule (the harmonicCloseness adaptive-sizing discipline applied to
-  * a storage level): estimate the frame's serialized size from a
-  * metadata-only row count ([[ParquetMeta.rowCount]] — no scan job)
-  * and a bytes/row figure, then
-  *   - fits well inside the heap (≤ 1/4 of `Runtime.maxMemory`):
-  *     MEMORY_AND_DISK_SER — compact tracked bytes, no disk roundtrip
-  *     at bench SFs;
+  * a storage level): the caller estimates the frame's serialized size
+  * (footer row counts from [[ParquetMeta.rowCount]] — no scan job —
+  * times a bytes/row figure) and [[adaptiveLevel]] compares it with
+  * `Runtime.getRuntime.maxMemory`, the heap of the JVM that plans the
+  * pin, in three tiers:
+  *   - ≤ heap/16: MEMORY_AND_DISK — deserialized rows, no serializer
+  *     pass on the write or on any scan;
+  *   - ≤ heap/4: MEMORY_AND_DISK_SER — compact tracked bytes, no disk
+  *     roundtrip at bench SFs;
   *   - otherwise: DISK_ONLY — the only level that never re-promotes,
   *     bounded at any scale.
-  * On a cluster the same estimate runs against each executor's heap,
-  * which is exactly the quantity that decides.
+  * Under `local[N]` that heap is also the executors' heap. On a
+  * cluster it is the driver's, not the executors' that store the
+  * blocks; tiering against executor storage memory is ROADMAP item 2.
   */
 object Checkpoints {
 
@@ -48,8 +55,8 @@ object Checkpoints {
     // 1.7 s to write and each scoring scan from 1.6-2.0 s to 0.2-0.4 s
     // at sf0.1 (trio solo 33.4 → 28.7 s). The r19-measured 10x-replica
     // OOM cases (fact-scaled pins, est ≥ 4.9 GB there) still land in
-    // the SER/DISK tiers. Thresholds stay fractions of the executor
-    // heap, so the same estimate decides correctly on any cluster.
+    // the SER/DISK tiers. The thresholds are fractions of this JVM's
+    // heap (see the object doc for what that means on a cluster).
     if (estBytes <= Runtime.getRuntime.maxMemory / 16)
       StorageLevel.MEMORY_AND_DISK
     else if (estBytes <= Runtime.getRuntime.maxMemory / 4)
@@ -59,6 +66,25 @@ object Checkpoints {
   /** Eager localCheckpoint at [[adaptiveLevel]] of the estimate. */
   def pin(df: DataFrame, estBytes: Long): DataFrame =
     df.localCheckpoint(true, adaptiveLevel(estBytes))
+
+  /** `df` with a row counter attached. The thunk returns the count
+    * once an action has run a plan that contains the returned frame
+    * (its pin, or the pin of a frame derived from it: an input count
+    * riding a filtered stage's pin), and blocks until then. */
+  def observeRows(df: DataFrame): (DataFrame, () => Long) = {
+    val rows = Observation()
+    (df.observe(rows, count(lit(1)).as("rows")),
+      () => rows.get("rows").asInstanceOf[Long])
+  }
+
+  /** Eager default-level `localCheckpoint()` plus the frame's row count,
+    * taken by an observed metric in the pin's own job. A `.count()`
+    * after the pin would run two more jobs (AQE runs the count's
+    * shuffle map stage and its final stage separately). */
+  def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val (observed, rows) = observeRows(df)
+    (observed.localCheckpoint(), rows())
+  }
 
   /** [[pin]] with a width floor, decided from the ESTIMATE in ONE
     * materialization (r20 optimization round — replaces r19's

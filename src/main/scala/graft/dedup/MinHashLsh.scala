@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** MinHash + LSH near-duplicate detection — the flagship linear-scale
   * near-dup path for a 100 TB corpus.
@@ -117,16 +117,14 @@ object MinHashLsh {
                  maxRounds: Int = 10): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val edges0 = pairs
-      .select(col("a_id").cast("long").as("_1"), col("b_id").cast("long").as("_2"))
-      .as[(Long, Long)].localCheckpoint()
-    val edgeRows = edges0.count()
+    val (edges0, edgeRows) = Checkpoints.pinCounted(pairs
+      .select(col("a_id").cast("long").as("_1"), col("b_id").cast("long").as("_2")))
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val loopParts = math.max(1L,
       math.min(prevParts.toLong, edgeRows / 2000000L + 1L)).toInt
     spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     val mapping = try {
-      var e = edges0.coalesce(loopParts)
+      var e = edges0.as[(Long, Long)].coalesce(loopParts)
       var remaining = edgeRows
       var round = 0
       var m: DataFrame = null // cumulative (__node, rep_id)
@@ -135,14 +133,15 @@ object MinHashLsh {
           .toDF("__node", "__lbl")
           .groupBy("__node").agg(min("__lbl").as("__lbl"))
           .localCheckpoint()
-        e = e.toDF("__a", "__b")
+        val (next, nextRows) = Checkpoints.pinCounted(e.toDF("__a", "__b")
           .join(g.select(col("__node").as("__a"), col("__lbl").as("__la")), "__a")
           .join(g.select(col("__node").as("__b"), col("__lbl").as("__lb")), "__b")
           .filter(col("__la") =!= col("__lb"))
           .select(least(col("__la"), col("__lb")).as("_1"),
             greatest(col("__la"), col("__lb")).as("_2"))
-          .distinct().as[(Long, Long)].localCheckpoint()
-        remaining = e.count() // cheap scan of the checkpointed blocks
+          .distinct())
+        e = next.as[(Long, Long)]
+        remaining = nextRows
         round += 1
         // compose: previous labels that g re-contracts follow it; ≤
         // maxRounds lazy joins of checkpointed frames, lineage bounded
@@ -150,8 +149,6 @@ object MinHashLsh {
         else m.join(g.select(col("__node").as("__lbl"), col("__lbl").as("__lbl2")),
             Seq("__lbl"), "left")
           .select(col("__node"), coalesce(col("__lbl2"), col("__lbl")).as("__lbl"))
-        if (sys.env.contains("GRAFT_PROF"))
-          System.err.println(s"[assignReps] round $round edges=$remaining")
       }
       if (remaining > 0)
         System.err.println(

@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.operators.Ranks
 
 /** Isotonic (monotone) regression by pool-adjacent-violators — the
@@ -61,13 +61,14 @@ object Isotonic {
     * Returns the final block table plus `rate_permicro` = exact
     * truncating 10⁶·pos div n. */
   def iterate(blocks: DataFrame, keyCol: String, maxRounds: Int = 32): DataFrame = {
-    var cur = blocks.localCheckpoint()
+    var (cur, curRows) = Checkpoints.pinCounted(blocks)
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
-      val next = pavaStep(cur, keyCol).localCheckpoint()
-      done = next.count() == cur.count() // pooling strictly shrinks
+      val (next, nextRows) = Checkpoints.pinCounted(pavaStep(cur, keyCol))
+      done = nextRows == curRows // pooling strictly shrinks
       cur = next
+      curRows = nextRows
       round += 1
     }
     cur.withColumn("rate_permicro", expr("(1000000 * pos) div n"))

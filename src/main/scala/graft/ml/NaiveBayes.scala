@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.operators.Sampling
 
 /** Multinomial Naive Bayes text classifier — train AND score in one
@@ -52,8 +52,7 @@ object NaiveBayes {
       .agg(count(lit(1)).as("n_tc"))
     val classes = train.groupBy(col("label"))
       .agg(count(lit(1)).as("n_c")).localCheckpoint() // grid + priors
-    val vocab = counts.select("g").distinct().localCheckpoint()
-    val v = vocab.count()
+    val (vocab, v) = Checkpoints.pinCounted(counts.select("g").distinct())
     // class priors from train DOC counts (not gram counts)
     val priors = base.filter(col("is_train"))
       .groupBy(col("label")).agg(count(lit(1)).as("d_c"))

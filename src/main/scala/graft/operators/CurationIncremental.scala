@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.dedup.{Decontaminate, IncrementalDedup}
 import graft.functions.TextFunctions
 import graft.sources.VersionedTable
@@ -51,17 +51,18 @@ object CurationIncremental {
     * benchmark frame (idCol, text). */
   def curateBatch(batch: DataFrame, registry: DataFrame,
                   bench: DataFrame): (Seq[(Int, String, Long, Long)], DataFrame) = {
-    val q = quality(batch).localCheckpoint()
+    // the batch's own count rides q's pin job, observed upstream of
+    // the quality filter
+    val (observedBatch, batchRows) = Checkpoints.observeRows(batch)
+    val (q, nQ) = Checkpoints.pinCounted(quality(observedBatch))
+    val nIn = batchRows()
     val accepted = IncrementalDedup.acceptBatch(q, "doc_id", "text", registry)
       .localCheckpoint() // read by the join AND the registry append
-    val dd = q.join(accepted.select("doc_id"), Seq("doc_id"))
-      .localCheckpoint()
-    val dec = Decontaminate.decontaminate(
-        dd.filter(pmod(col("doc_id"), lit(BenchMod)) =!= 0),
-        bench, "doc_id", "text", n = 8)
-      .localCheckpoint()
-    val nIn = batch.count(); val nQ = q.count()
-    val nDd = dd.count(); val nDec = dec.count()
+    val (dd, nDd) = Checkpoints.pinCounted(
+      q.join(accepted.select("doc_id"), Seq("doc_id")))
+    val (dec, nDec) = Checkpoints.pinCounted(Decontaminate.decontaminate(
+      dd.filter(pmod(col("doc_id"), lit(BenchMod)) =!= 0),
+      bench, "doc_id", "text", n = 8))
     (Seq((1, "quality_floor", nIn, nQ), (2, "dedup_registry", nQ, nDd),
       (3, "decontaminate", nDd, nDec)), dec)
   }

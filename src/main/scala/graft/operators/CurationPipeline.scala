@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import graft.functions.TextFunctions
 import graft.dedup.{Decontaminate, ExactDedup, SubstringDedup}
 
@@ -51,8 +51,11 @@ import graft.dedup.{Decontaminate, ExactDedup, SubstringDedup}
   * BpeEncode lesson).
   *
   * Scale: the chain is 8 sequential corpus-linear stages, each pinned
-  * by localCheckpoint so no stage's plan re-derives its predecessors;
-  * per-stage shapes are documented on the operators themselves.
+  * by [[Checkpoints.pinCounted]] so no stage's plan re-derives its
+  * predecessors; the 9 counts the accounting reports (input plus 8
+  * stages) are observed inside those 9 pin jobs, so the accounting
+  * costs no scan of its own. Per-stage shapes are documented on the
+  * operators themselves.
   */
 object CurationPipeline {
 
@@ -64,19 +67,24 @@ object CurationPipeline {
   val ShardSize = 64L
 
   /** Run the pipeline over (doc_id, text, source, lang) rows; returns
-    * the per-stage accounting plus (via `stages`) each stage's
-    * survivor frame. `benchRaw` is the FIXED external benchmark set
-    * (drawn from the raw corpus, not from survivors — a cut upstream
-    * must not change what counts as contamination). */
-  def stageFrames(docs: DataFrame): Seq[(String, DataFrame)] = {
-    val base = docs.localCheckpoint()
+    * each stage's pinned survivor frame with its row count, input
+    * first. `bench` is the FIXED external benchmark set (drawn from the
+    * raw corpus, not from survivors — a cut upstream must not change
+    * what counts as contamination). */
+  private def stagePins(docs: DataFrame): Seq[(String, DataFrame, Long)] = {
+    val pins = Seq.newBuilder[(String, DataFrame, Long)]
+    def pin(name: String, df: DataFrame): DataFrame = {
+      val (p, n) = Checkpoints.pinCounted(df)
+      pins += ((name, p, n))
+      p
+    }
+    val base = pin("input", docs)
     val bench = base.filter(pmod(col("doc_id"), lit(BenchMod)) === 0)
 
-    val s1 = TextFunctions.withQuality(base, "text")
+    val s1 = pin("quality_floor", TextFunctions.withQuality(base, "text")
       .filter(col("quality_score") >= QualityFloor)
-      .select("doc_id", "text", "source", "lang")
-      .localCheckpoint()
-    val s2 = ExactDedup.dedup(s1, "doc_id", "text").localCheckpoint()
+      .select("doc_id", "text", "source", "lang"))
+    val s2 = pin("dedup_exact", ExactDedup.dedup(s1, "doc_id", "text"))
     // near-dup at the degenerate gate setting: pairs = docs with EQUAL
     // trigram-shingle sets (MinHashLsh's 1-band/full-signature path);
     // equality is an equivalence, so every non-class-minimum id appears
@@ -84,41 +92,38 @@ object CurationPipeline {
     val nd = graft.dedup.MinHashLsh
       .identicalShingleSetPairs(s2, "doc_id", "text")
       .select(col("b_id").as("doc_id")).distinct()
-    val s2b = s2.join(nd, Seq("doc_id"), "left_anti").localCheckpoint()
+    val s2b = pin("neardup_minhash", s2.join(nd, Seq("doc_id"), "left_anti"))
     val stats = SubstringDedup.repeatedWindowStats(s2b, "doc_id", "text",
       SubstringDedup.WindowTokens)
-    val s3 = s2b.join(stats.select("doc_id", "repeated_ppm"), Seq("doc_id"), "left")
-      .filter(col("repeated_ppm").isNull ||
-        col("repeated_ppm") < SubstringCutPpm)
-      .select("doc_id", "text", "source", "lang")
-      .localCheckpoint()
-    val s4 = Decontaminate.decontaminate(
-        s3.filter(pmod(col("doc_id"), lit(BenchMod)) =!= 0),
-        bench, "doc_id", "text", n = 8)
-      .localCheckpoint()
-    val s5 = s4.join(
-        ImportanceSelect.importanceSelect(s4, "doc_id", "text",
-            col("source") === "src0")
-          .filter(col("selected")).select("doc_id"),
-        Seq("doc_id"))
-      .localCheckpoint()
-    val s6 = Sampling.submixTemperature(s5, "lang", "doc_id",
-      MixTemperature, MixTargetRows).localCheckpoint()
-    val s7 = Sampling.shardAssign(s6, "doc_id", ShardSize)
-      .select("doc_id", "text", "source", "lang")
-      .localCheckpoint()
-    Seq("input" -> base, "quality_floor" -> s1, "dedup_exact" -> s2,
-      "neardup_minhash" -> s2b, "substring_cut" -> s3,
-      "decontaminate" -> s4, "importance_select" -> s5,
-      "submix_temperature" -> s6, "shard_assign" -> s7)
+    val s3 = pin("substring_cut",
+      s2b.join(stats.select("doc_id", "repeated_ppm"), Seq("doc_id"), "left")
+        .filter(col("repeated_ppm").isNull ||
+          col("repeated_ppm") < SubstringCutPpm)
+        .select("doc_id", "text", "source", "lang"))
+    val s4 = pin("decontaminate", Decontaminate.decontaminate(
+      s3.filter(pmod(col("doc_id"), lit(BenchMod)) =!= 0),
+      bench, "doc_id", "text", n = 8))
+    val s5 = pin("importance_select", s4.join(
+      ImportanceSelect.importanceSelect(s4, "doc_id", "text",
+          col("source") === "src0")
+        .filter(col("selected")).select("doc_id"),
+      Seq("doc_id")))
+    val s6 = pin("submix_temperature", Sampling.submixTemperature(s5, "lang",
+      "doc_id", MixTemperature, MixTargetRows))
+    pin("shard_assign", Sampling.shardAssign(s6, "doc_id", ShardSize)
+      .select("doc_id", "text", "source", "lang"))
+    pins.result()
   }
+
+  /** Each stage's pinned survivor frame, input first. */
+  def stageFrames(docs: DataFrame): Seq[(String, DataFrame)] =
+    stagePins(docs).map { case (name, df, _) => name -> df }
 
   /** (stage_rank, stage, n_in, n_kept, n_dropped) for the 8 stages. */
   def accounting(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val frames = stageFrames(docs)
-    val counts = frames.map { case (name, df) => name -> df.count() }
+    val counts = stagePins(docs).map { case (name, _, n) => name -> n }
     counts.sliding(2).zipWithIndex.map {
       case (Seq((_, nIn), (stage, nKept)), i) =>
         (i + 1, stage, nIn, nKept, nIn - nKept)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** Local graph metrics over a BOUNDED-DEGREE similarity graph — triangle
   * counting, one synchronous label-propagation round, and a two-half-step
@@ -742,7 +742,7 @@ object GraphMetrics {
     * Sizing is ADAPTIVE (r18): each round repartitions by (src, node)
     * to ~1M pairs per partition using the bound
     * |prev state|·(maxDeg+1) — the previous round's MEASURED count
-    * (nearly free on its localCheckpoint) times the exact one-hop
+    * (observed in its pin job) times the exact one-hop
     * growth factor (max degree from one up-front aggregate). A-priori
     * nV·deg^depth estimates both failed at the 100× replica: average
     * degree under-scales on skew (the r17 OOM), max degree
@@ -779,8 +779,8 @@ object GraphMetrics {
     // than the r17 average-degree form). Instead each round sizes from
     // the PREVIOUS round's MEASURED pair count: the next state is
     // ≤ |dist|·(maxDeg + 1) exactly (every pair spawns ≤ maxDeg
-    // one-hop extensions and survives itself), and the count is nearly
-    // free on the just-materialized localCheckpoint.
+    // one-hop extensions and survives itself), and the count is
+    // observed inside the round's own pin job.
     var distCount = nV
     for (_ <- 1 to maxDepth) {
       val parts = math.max(sessionParts, math.min(4096.0,
@@ -801,10 +801,10 @@ object GraphMetrics {
         if (parts > sessionParts)
           merged.repartition(parts, col("src"), col("node"))
         else merged
-      dist = shaped
-        .groupBy("src", "node").agg(min("d").as("d"))
-        .localCheckpoint()
-      distCount = dist.count() // anchors the next round's sizing
+      val (pinned, pinnedRows) = Checkpoints.pinCounted(
+        shaped.groupBy("src", "node").agg(min("d").as("d")))
+      dist = pinned
+      distCount = pinnedRows
     }
     dist.groupBy(col("src").as("node"))
       .agg((count(lit(1)) - lit(1L)).as("n_reached"),
@@ -833,12 +833,11 @@ object GraphMetrics {
     * degree by the top-K construction); the argmax is a max-struct
     * aggregate per node. */
   def louvainMoveStep(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u"), col("v")).localCheckpoint()
+    val (e, m) = Checkpoints.pinCounted(edges.select(col("u"), col("v")))
     val und = e.select(col("u").as("node"), col("v").as("nbr"))
       .unionByName(e.select(col("v").as("node"), col("u").as("nbr")))
     val deg = und.groupBy("node").agg(count(lit(1)).as("deg"))
       .localCheckpoint() // joined on both endpoints
-    val m = e.count()
     und
       .join(deg, Seq("node"))
       .join(deg.select(col("node").as("nbr"), col("deg").as("deg_nbr")),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.CurationPipeline
 
@@ -36,6 +37,26 @@ class CurationPipelineSpec extends SparkSpec {
     assert(acc.last._5 == 0L)
     // the pipeline actually curates: something was dropped overall
     assert(fin < corpus && fin > 0)
+  }
+
+  private def plantedDocs =
+    CurationPipeline.plantNearDups(graft.Tables.documents(spark, sfDir)
+      .select("doc_id", "text", "source", "lang"))
+
+  test("accounting: n_kept is each stage frame's count, taken inside the pins") {
+    var acc: DataFrame = null
+    val counted = jobsDuring { acc = CurationPipeline.accounting(plantedDocs) }
+    var counts: Seq[(String, Long)] = Nil
+    val pinThenCount = jobsDuring {
+      counts = CurationPipeline.stageFrames(plantedDocs)
+        .map { case (stage, df) => stage -> df.count() }
+    }
+    val kept = acc.as[(Int, String, Long, Long, Long)].collect()
+      .map(r => r._2 -> r._4).toMap
+    assert(kept == counts.tail.toMap)
+    // one count per frame (input + 8 stages), each at least one job
+    assert(pinThenCount - counted >= 9,
+      s"accounting ran $counted jobs, pins then 9 counts $pinThenCount")
   }
 
   test("trace: per-doc drop attribution ties out against the accounting") {

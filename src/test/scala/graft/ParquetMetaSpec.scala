@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, max, min, when}
 import org.apache.spark.sql.types.TimestampType
@@ -15,38 +12,6 @@ class ParquetMetaSpec extends SparkSpec {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
-  /** Jobs started on this thread while `work` runs. The listener bus is
-    * asynchronous, so a sentinel job in its own group follows `work`:
-    * once the listener sees the sentinel start, every earlier job start
-    * has been delivered. */
-  private def jobsDuring(work: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"parquet-meta-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new AtomicInteger(0)
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)    => jobs.incrementAndGet(); ()
-          case Some(`sentinel`) => sentinelSeen.countDown()
-          case _                => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      work
-      sc.setJobGroup(sentinel, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
 
   test("rowCount equals count() on a single file and on a multi-file directory") {
     val p = s"$sfDir/lineitem.parquet"
