@@ -1,13 +1,34 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, PinnedFrames}
+import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, Partitioning, PartitioningCollection}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** The pin API: eager `localCheckpoint`s, at a storage level tiered
   * from a size estimate, or at the default level with the row count
-  * observed in the pin's own job.
+  * observed in the pin's own job. Pin through here, never through a raw
+  * `localCheckpoint`: a pin made here keeps its partitioning (unless
+  * AQE coalesced the read; see [[checkpoint]]).
+  *
+  * Why pins need help to keep it: `Dataset.localCheckpoint` builds its
+  * `LogicalRDD` with `LogicalRDD.fromDataset`, which takes the
+  * partitioning from the executed plan's `outputPartitioning`. Under
+  * AQE that plan is an `AdaptiveSparkPlanExec`, which (Spark 4.1.2)
+  * does not override `outputPartitioning`, so a raw pin reports
+  * `UnknownPartitioning(0)` and every consumer keyed on the pin's key
+  * shuffles it again: `repartition(4, u).distinct().localCheckpoint()
+  * .groupBy(u)` plans an `Exchange` with AQE on and none with AQE off.
+  * [[checkpoint]] therefore rebuilds the pin's `LogicalRDD` with the
+  * `outputPartitioning` of the FINAL adaptive plan (the plan that
+  * produced the stored partitions, read only once `isFinalPlan` is
+  * set; the first leaf of a `PartitioningCollection`, as
+  * `fromDataset` does). Rebuilding a frame from a logical plan needs
+  * `classic.Dataset.ofRows`, which is `private[sql]`; that one call is
+  * [[org.apache.spark.sql.PinnedFrames]], used only here.
   *
   * Spark's default localCheckpoint level keeps deserialized rows on
   * the executor heap — right for the domain-sized frames most graft
@@ -36,7 +57,7 @@ import org.apache.spark.storage.StorageLevel
   *     bounded at any scale.
   * Under `local[N]` that heap is also the executors' heap. On a
   * cluster it is the driver's, not the executors' that store the
-  * blocks; tiering against executor storage memory is ROADMAP item 2.
+  * blocks; tiering against executor storage memory is ROADMAP item 6.
   */
 object Checkpoints {
 
@@ -63,9 +84,45 @@ object Checkpoints {
       StorageLevel.MEMORY_AND_DISK_SER
     else StorageLevel.DISK_ONLY
 
+  /** Eager `localCheckpoint` at `level` (`None`: `localCheckpoint()`'s
+    * default) whose `LogicalRDD` reports the partitioning of the final
+    * adaptive plan that stored it (see the object doc). A plan AQE did
+    * not wrap already hands its partitioning to the checkpoint; the
+    * partition-count check keeps any plan whose claim does not match
+    * the stored RDD at Spark's own answer.
+    *
+    * A coalesced hash read (AQE merged the shuffle's small partitions)
+    * stays unknown. Its shuffle spec cannot co-partition a join, so it
+    * would only spare the exchange under an aggregate or window of a
+    * frame small enough to coalesce. And a partitioning with attributes
+    * costs AQE's exchange reuse between two instances of the pin in one
+    * plan: `RDDScanExec`'s canonical form keeps the partitioning's
+    * attribute ids, which differ per instance. Carried, the coalesced
+    * curation stage pins of the sf0.01 documents made ImportanceSelect
+    * over them run 16 jobs instead of 13 (its importance aggregate ran
+    * twice instead of being reused). */
+  private def checkpoint(df: DataFrame, level: Option[StorageLevel]): DataFrame = {
+    val pinned = level.fold(df.localCheckpoint())(df.localCheckpoint(true, _))
+    (df.queryExecution.executedPlan, pinned.queryExecution.logical) match {
+      case (a: AdaptiveSparkPlanExec, r: LogicalRDD) if a.isFinalPlan =>
+        firstLeaf(a.executedPlan.outputPartitioning) match {
+          case _: CoalescedHashPartitioning => pinned
+          case p if p.numPartitions == r.rdd.getNumPartitions =>
+            PinnedFrames.withPartitioning(pinned, p)
+          case _ => pinned
+        }
+      case _ => pinned
+    }
+  }
+
+  private def firstLeaf(p: Partitioning): Partitioning = p match {
+    case PartitioningCollection(ps) => firstLeaf(ps.head)
+    case other => other
+  }
+
   /** Eager localCheckpoint at [[adaptiveLevel]] of the estimate. */
   def pin(df: DataFrame, estBytes: Long): DataFrame =
-    df.localCheckpoint(true, adaptiveLevel(estBytes))
+    checkpoint(df, Some(adaptiveLevel(estBytes)))
 
   /** `df` with a row counter attached. The thunk returns the count
     * once an action has run a plan that contains the returned frame
@@ -81,9 +138,15 @@ object Checkpoints {
     * taken by an observed metric in the pin's own job. A `.count()`
     * after the pin would run two more jobs (AQE runs the count's
     * shuffle map stage and its final stage separately). */
-  def pinCounted(df: DataFrame): (DataFrame, Long) = {
+  def pinCounted(df: DataFrame): (DataFrame, Long) = counted(df, None)
+
+  /** [[pin]] plus the frame's row count, observed as in [[pinCounted]]. */
+  def pinCounted(df: DataFrame, estBytes: Long): (DataFrame, Long) =
+    counted(df, Some(adaptiveLevel(estBytes)))
+
+  private def counted(df: DataFrame, level: Option[StorageLevel]): (DataFrame, Long) = {
     val (observed, rows) = observeRows(df)
-    (observed.localCheckpoint(), rows())
+    (checkpoint(observed, level), rows())
   }
 
   /** [[pin]] with a width floor, decided from the ESTIMATE in ONE
@@ -105,13 +168,16 @@ object Checkpoints {
     * sf0.1) and (b) leaked the narrow blocks — Dataset.unpersist goes
     * through the CacheManager, which does not track localCheckpoint
     * persistence (the r19 ADVICE finding); with one materialization
-    * there is no narrow copy at all. */
+    * there is no narrow copy at all. The round-robin drops any key
+    * partitioning: a frame whose consumers group or join on one key
+    * is pinned with [[pin]] after a `repartition(n, key)` instead
+    * (NegativeSample's positives). */
   def pinWide(df: DataFrame, estBytes: Long): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     val advisory = df.sparkSession.sessionState.conf
       .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     if (estBytes < par * advisory)
-      df.repartition(par).localCheckpoint(true, adaptiveLevel(estBytes))
+      pin(df.repartition(par), estBytes)
     else pin(df, estBytes)
   }
 }

@@ -58,13 +58,13 @@ object ScratchPlans {
         val train = p.filter(col("d") < lit("1999-01-01").cast("date"))
         val test = p.filter(col("d") >= lit("1999-01-01").cast("date"))
         val partRows = ParquetMeta.rowCount(spark, s"$dir/part.parquet")
-        val recs = graft.operators.Covisitation.recommend(train,
-          Checkpoints.pin(
-            graft.operators.Covisitation.covisitTopM(train, "cust", "item",
-              graft.operators.Covisitation.M,
-              parts = 32),
-            partRows * 10 * 48L),
-          "cust", "item", graft.operators.Covisitation.K,
+        val (covisit, covisitRows) = Checkpoints.pinCounted(
+          graft.operators.Covisitation.covisitTopM(train, "cust", "item",
+            graft.operators.Covisitation.M,
+            parts = 32),
+          partRows * 10 * 48L)
+        val recs = graft.operators.Covisitation.recommend(train, covisit,
+          covisitRows, "cust", "item", graft.operators.Covisitation.K,
           parts = 32) // the real recsysEval's scoreParts bound
         val t = test.select(col("cust").as("u"), col("item").as("j"))
           .distinct().localCheckpoint(true)

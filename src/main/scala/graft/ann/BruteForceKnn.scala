@@ -14,11 +14,12 @@ import graft.functions.VectorFunctions._
   *
   * Scale shape: the query set is small by construction and broadcast, so
   * scoring is a map-side pass over the corpus — no shuffle of corpus rows
-  * keyed by anything skewed. Top-k extraction is two-phase: a per-shuffle-
-  * partition partial top-k (keyed on (query, partition), uniformly spread)
-  * shrinks |corpus|×|queries| scored rows to |parts|×|queries|×k before
-  * the final per-query rank — no reducer ever holds a whole query's
-  * scored corpus, so the shape survives a 1000-executor 100 TB corpus.
+  * keyed by anything skewed. Top-k extraction is [[Ranking.partialTopK]]:
+  * Spark's partial `WindowGroupLimit` keeps each corpus partition's top k
+  * per query map-side, so the one `query_id` exchange moves
+  * |parts|×|queries|×k rows, not |corpus|×|queries| — no reducer ever
+  * holds a whole query's scored corpus, so the shape survives a
+  * 1000-executor 100 TB corpus.
   */
 object BruteForceKnn {
 
@@ -40,11 +41,19 @@ object BruteForceKnn {
   /** Deterministic query subset: every 100th vector id. */
   def querySubset(vecs: DataFrame): DataFrame = vecs.filter(col("vec_id") % 100 === 0)
 
+  /** The entry points' query set: [[querySubset]] of the unspread
+    * embeddings table. The ~10 queries are broadcast; read through
+    * [[graft.Tables.embeddings]] (round-robin spread when the file scans
+    * narrow) they would be shuffled first, one job per call. The corpus
+    * side stays spread. */
+  def queries(spark: SparkSession, dir: String): DataFrame =
+    querySubset(Tables.table(spark, dir, "embeddings"))
+
   // ---- query-map entry (#32) ----
 
   def annBruteforce(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, querySubset(vecs), "vec_id", "embedding", k = 5)
+    topK(vecs, queries(spark, dir), "vec_id", "embedding", k = 5)
   }
 
   def oracleSql: String =

@@ -26,7 +26,10 @@ import graft.functions.VectorFunctions._
   * corpus size), one broadcast of k×dim centroids assigns the corpus in
   * a single map pass, lists shuffle on centroid id (k ≫ cores keeps them
   * uniform — grow nlist with corpus size exactly like the reference's
-  * 65536), and the probe join touches nprobe/nlist of the corpus.
+  * 65536), and the probe join touches nprobe/nlist of the corpus. The
+  * handful of queries is broadcast into that join, and the top-k is
+  * [[Ranking.partialTopK]]: each partition's top k per query is kept
+  * map-side, below the one `query_id` exchange.
   */
 object IvfAnn {
 
@@ -132,7 +135,7 @@ object IvfAnn {
 
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding", k = 5,
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding", k = 5,
       centroidsOpt = Some(trainCentroidsCached(spark, dir, "embeddings",
         vecs, "vec_id", "embedding")))
   }
@@ -149,7 +152,7 @@ object IvfAnn {
     * pipeline (train → assign → probe → score → rank). */
   def annIvfExhaustive(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding",
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding",
       k = 5, nlist = NList, nprobe = NList,
       centroidsOpt = Some(trainCentroidsCached(spark, dir, "embeddings",
         vecs, "vec_id", "embedding")))

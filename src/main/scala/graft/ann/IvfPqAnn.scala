@@ -141,7 +141,7 @@ object IvfPqAnn {
 
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding", k = 5,
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding", k = 5,
       indexOpt = Some(trainIndexCached(spark, dir, "embeddings",
         vecs, "vec_id", "embedding")))
   }

@@ -52,7 +52,7 @@ object KnnClassify {
     * (quantized cosine) neighbors' labels. */
   def knnClassifyEmbeddings(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    classify(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding",
+    classify(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding",
       "label", k = 5)
   }
 

@@ -92,7 +92,8 @@ object LshAnn {
   }
 
   /** Approximate top-k: candidates from bucket collisions, exact cosine
-    * verify, two-phase rank. Output: query_id, neighbor_id, cos_sim, rank. */
+    * verify, per-query top-k rank ([[Ranking.partialTopK]]).
+    * Output: query_id, neighbor_id, cos_sim, rank. */
   def topK(corpus: DataFrame, queries: DataFrame, idCol: String,
            vecCol: String, k: Int,
            tables: Int = Tables_, bits: Int = Bits): DataFrame = {
@@ -122,7 +123,7 @@ object LshAnn {
 
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding", k = 5)
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding", k = 5)
   }
 
   // ---- query-map entry (hash-gated via degeneracy) ----
@@ -131,10 +132,10 @@ object LshAnn {
     * candidate set is every (query, corpus) pair and LSH degenerates to
     * exhaustive search — bit-identical to [[BruteForceKnn]], sharing its
     * DuckDB oracle. Hash-gates the whole LSH pipeline (hyperplane
-    * bucketing → postings join → verify → two-phase rank). */
+    * bucketing → postings join → verify → top-k rank). */
   def annLshExhaustive(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding",
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding",
       k = 5, tables = 1, bits = 1)
   }
 }

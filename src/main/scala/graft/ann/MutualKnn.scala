@@ -12,8 +12,8 @@ import graft.Tables
   * cluster collapse; candidate generation swaps to [[IvfAnn]]/[[LshAnn]]
   * at 100 TB exactly as in [[KnnClassify]].
   *
-  * Relational shape: ONE directed top-k pass ([[BruteForceKnn.topK]]'s
-  * two-phase partial top-k), then mutuality is a self-join of the
+  * Relational shape: ONE directed top-k pass ([[BruteForceKnn.topK]],
+  * per-partition top-k kept map-side), then mutuality is a self-join of the
   * directed edge list on the reversed key — no second scoring pass. The
   * canonical (a < b) pair carries both directed ranks.
   */

@@ -157,7 +157,7 @@ object PqAnn {
 
   def annPq(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding", k = 5,
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding", k = 5,
       booksOpt = Some(trainCodebooksCached(spark, dir, "embeddings",
         vecs, "vec_id", "embedding")))
   }
@@ -171,7 +171,7 @@ object PqAnn {
     * end-to-end. */
   def annPqExhaustive(spark: SparkSession, dir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, dir)
-    topK(vecs, BruteForceKnn.querySubset(vecs), "vec_id", "embedding",
+    topK(vecs, BruteForceKnn.queries(spark, dir), "vec_id", "embedding",
       k = 5, poolOverride = Int.MaxValue,
       booksOpt = Some(trainCodebooksCached(spark, dir, "embeddings",
         vecs, "vec_id", "embedding")))

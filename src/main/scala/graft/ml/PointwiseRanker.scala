@@ -59,9 +59,12 @@ object PointwiseRanker {
       .agg(count(lit(1)).as("item_pop"))
     val userAct = pos.groupBy("user_id")
       .agg(count(lit(1)).as("user_act"))
+    // user first: userAct aggregates the user-partitioned pos pin with
+    // no exchange, and the user join keeps that side where it is (only
+    // labeled moves); the item join follows
     labeled
-      .join(itemPop, Seq("item_id"), "left")
       .join(userAct, Seq("user_id"), "left")
+      .join(itemPop, Seq("item_id"), "left")
       .select(col("user_id"), col("item_id"), col("label"),
         coalesce(col("item_pop"), lit(0L)).as("item_pop"),
         coalesce(col("user_act"), lit(0L)).as("user_act"))

@@ -156,9 +156,11 @@ object Covisitation {
     * The broadcast decision is MEASURED, never unconditional: the
     * matrix is |items|·m rows (catalog-scaled — it fits at retail
     * scale and outgrows any budget at the r16 100×-replica's catalog,
-    * where the old unconditional hint OOM'd), so the matrix row count
-    * — one cheap scan of the caller's checkpointed frame — picks
-    * broadcast fan-out vs a plain shuffle join on the item key. AQE
+    * where the old unconditional hint OOM'd), so `covisitRows`, the
+    * matrix row count, picks broadcast fan-out vs a plain shuffle join
+    * on the item key. Callers count the matrix in the job that pins it
+    * ([[graft.Checkpoints.pinCounted]]): a `.count()` of the pin would
+    * run two more jobs. AQE
     * cannot make this call here: localCheckpoint hides size stats, so
     * an un-hinted plan stays sort-merge even at gate SF (the r16
     * interim regression). The already-seen anti join is never
@@ -166,13 +168,13 @@ object Covisitation {
     * (u, j), so the anti join only shuffles the history-sized probe
     * side. Per-user top-K is a user-partitioned window rank (see
     * [[covisitTopM]] for why the window beats the bounded udaf). */
-  def recommend(history: DataFrame, covisit: DataFrame,
+  def recommend(history: DataFrame, covisit: DataFrame, covisitRows: Long,
                 userCol: String, itemCol: String, k: Int,
                 parts: Int = 0): DataFrame = {
     val hist = history
       .select(col(userCol).as("u"), col(itemCol).cast("long").as("i"))
       .distinct()
-    val doBroadcast = covisit.count() <= BroadcastCovisitMaxRows
+    val doBroadcast = covisitRows <= BroadcastCovisitMaxRows
     val anti = hist.withColumnRenamed("i", "j")
     // broadcast path: colocate each user's history BEFORE the fan-out —
     // the per-(u,j) partial aggregate then collapses the |history(u)|·M
@@ -372,11 +374,10 @@ object Covisitation {
       spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val scoreParts = math.max(sessionParts,
       math.min(4096L, factRows * M / 1500000L).toInt)
-    val recs = recommend(train,
-      graft.Checkpoints.pin(
-        covisitTopM(train, "cust", "item", M, parts = pairParts(spark, dir)),
-        partRows * M * 48L),
-      "cust", "item", K,
+    val (covisit, covisitRows) = graft.Checkpoints.pinCounted(
+      covisitTopM(train, "cust", "item", M, parts = pairParts(spark, dir)),
+      partRows * M * 48L)
+    val recs = recommend(train, covisit, covisitRows, "cust", "item", K,
       // always pass the bound: the broadcast branch uses it as the
       // explicit width of the one exchange the whole scoring→eval
       // pipeline runs at (see recommend); the shuffle branch engages

@@ -66,14 +66,21 @@ object NegativeSample {
     // positive branch (plus, via union pruning, PointwiseRanker's two
     // feature counts) — unpinned, the fact join + distinct executed
     // once per consumer (r20 profiled: four identical 599k-row 3-task
-    // stages in pointwise_eval). 24 B/row = 2 longs + row overhead;
-    // pinWide floors the width at the session parallelism, and the
-    // level adapts (SER/disk) at replica scale.
-    val pos = graft.Checkpoints.pinWide(
+    // stages in pointwise_eval). One repartition(n, user_id) serves the
+    // distinct, and the pin keeps that partitioning: the candidate
+    // distinct and PointwiseRanker's user count read the pin where it
+    // is, with no exchange (the (user, item) anti-join still re-keys
+    // both sides: under the default requireAllClusterKeysForCoPartition
+    // a user-only partitioning cannot co-partition a two-key join).
+    // n is the footer-derived pairParts width (at least the session
+    // parallelism, so the consumers run wide); 24 B/row = 2 longs +
+    // row overhead, and the level adapts (SER/disk) at replica scale.
+    val pos = graft.Checkpoints.pin(
       Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
         .join(Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey"),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
+        .repartition(Covisitation.pairParts(spark, dir), col("user_id"))
         .distinct(),
       graft.ParquetMeta.rowCount(spark, s"$dir/lineitem.parquet") * 24L)
     val ni = Tables.part(spark, dir).agg(max("p_partkey").as("__n"))

@@ -61,17 +61,41 @@ class AnnIndexStoreSpec extends SparkSpec {
   }
 
   test("gated ann_ivf runs zero training scans when the index is stored") {
+    // Records read by the jobs `work` starts, and only those: the
+    // listener bus is asynchronous, so task ends of the warm-up call
+    // below can still be queued when the listener is added. A sentinel
+    // job follows `work`; once its start is seen, every task end of
+    // `work` has been delivered.
     def countRecordsRead(work: => Unit): Long = {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+      val sc = spark.sparkContext
+      val group = s"records-${java.util.UUID.randomUUID()}"
+      val sentinel = s"$group-sentinel"
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
       val records = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some(`group`)    => j.stageIds.foreach(stages.add)
+            case Some(`sentinel`) => sentinelSeen.countDown()
+            case _                => ()
+          }
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null && stages.contains(t.stageId))
             records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
       }
-      spark.sparkContext.addSparkListener(listener)
-      try { work; Thread.sleep(500) } // listener bus is async; jobs done
-      finally spark.sparkContext.removeSparkListener(listener)
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "measured")
+        work
+        sc.setJobGroup(sentinel, "sentinel")
+        sc.parallelize(Seq(1), 1).count()
+        assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
       records.get()
     }
     // warm the store (may compute), then measure: a store hit reads

@@ -36,7 +36,7 @@ class CovisitationSpec extends SparkSpec {
     val cov = Seq((1L, 2L, 5L, 1L), (1L, 3L, 3L, 2L),
       (2L, 3L, 2L, 1L), (2L, 4L, 1L, 2L))
       .toDF("item_a", "item_b", "n_users", "rk")
-    val recs = Covisitation.recommend(hist, cov, "u", "i", k = 10)
+    val recs = Covisitation.recommend(hist, cov, cov.count(), "u", "i", k = 10)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     // 2 excluded (history); 3 = 3+2 = 5 at rank 1, 4 = 1 at rank 2
     assert(recs.toSeq === Seq((3L, 5L, 1L), (4L, 1L, 2L)))
