@@ -171,7 +171,7 @@ object Checkpoints {
     * there is no narrow copy at all. The round-robin drops any key
     * partitioning: a frame whose consumers group or join on one key
     * is pinned with [[pin]] after a `repartition(n, key)` instead
-    * (NegativeSample's positives). */
+    * (TpePointwise's fact join). */
   def pinWide(df: DataFrame, estBytes: Long): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     val advisory = df.sparkSession.sessionState.conf

@@ -23,12 +23,16 @@ import graft.operators.{NegativeSample, RankMetrics}
   * STEP (one Newton iteration; one scored leaderboard), not a
   * converged loop.
   *
-  * Scale shape: the labeled frame is [[NegativeSample]]'s one distinct
-  * shuffle + map-side explode + anti-join; features are two grouped
-  * counts at item/user cardinality joined back; the fit is ONE
-  * map-side-combined aggregate (nine BIGINT sums); scoring is a 1-row
-  * broadcast of the coefficients; the scoreboard is per-user windows
-  * at per-user candidate cardinality. Nothing quadratic.
+  * Scale shape: the labeled frame is [[NegativeSample]]'s per-user
+  * baskets (one user-keyed exchange) and one generator per basket; a
+  * row is as wide as one user's distinct items, uncapped because the
+  * frame must be exact. user_act is the basket size; item_pop is an
+  * explode of the same baskets grouped by item, which reads the user
+  * exchange again through AQE's exchange reuse (no pin), joined back
+  * at item cardinality; the fit is ONE map-side-combined aggregate
+  * (nine BIGINT sums); scoring is a 1-row broadcast of the
+  * coefficients; the scoreboard is per-user windows at per-user
+  * candidate cardinality. Nothing quadratic.
   */
 object PointwiseRanker {
 
@@ -39,35 +43,17 @@ object PointwiseRanker {
   /** The labeled training frame with integer features:
     * (user_id, item_id, label, item_pop, user_act). */
   def labeledFeatures(spark: SparkSession, dir: String): DataFrame = {
-    // the repeated subtree here is NegativeSample's fact distinct (its
-    // pos frame, consumed by the union, the candidate explode, the
-    // anti-join, and — through union pruning of the label filter —
-    // both feature counts below); it is pinned INSIDE
-    // negativeSampleOrders. Pinning the full labeled frame here
-    // instead was tried and REVERTED (r20): labeled is 4× the rows at
-    // ~92 B/row deserialized, and three 220 MB pin scans measured
-    // SLOWER than replaying the cheap pos distinct (6.1 s vs 3.5 s
-    // profile total at sf0.1).
-    val labeled = NegativeSample.negativeSampleOrders(spark, dir)
-    // count(*) below EQUALS "distinct purchasers"/"distinct items" only
-    // because NegativeSample's positives are DISTINCT (user, item)
-    // pairs (its `pos` CTE is SELECT DISTINCT); if that invariant ever
-    // relaxes, these must become countDistinct.
-    val pos = labeled.filter(col("label") === 1)
-      .select("user_id", "item_id")
-    val itemPop = pos.groupBy("item_id")
-      .agg(count(lit(1)).as("item_pop"))
-    val userAct = pos.groupBy("user_id")
-      .agg(count(lit(1)).as("user_act"))
-    // user first: userAct aggregates the user-partitioned pos pin with
-    // no exchange, and the user join keeps that side where it is (only
-    // labeled moves); the item join follows
-    labeled
-      .join(userAct, Seq("user_id"), "left")
+    // both consumers read the baskets above the same user exchange,
+    // which AQE runs once and reuses: no pin. A basket's items are
+    // distinct, so item_pop counts distinct purchasers.
+    val baskets = NegativeSample.orderBaskets(spark, dir)
+    val itemPop = baskets.select(explode(col("items")).as("item_id"))
+      .groupBy("item_id").agg(count(lit(1)).as("item_pop"))
+    NegativeSample.labeledOrders(spark, dir, baskets)
       .join(itemPop, Seq("item_id"), "left")
       .select(col("user_id"), col("item_id"), col("label"),
         coalesce(col("item_pop"), lit(0L)).as("item_pop"),
-        coalesce(col("user_act"), lit(0L)).as("user_act"))
+        col("user_act"))
   }
 
   // ---- query-map entries (hash-gated) ----
@@ -88,8 +74,8 @@ object PointwiseRanker {
     * exact-mean row — the scoreboard entry ray_train_pointwise.py's
     * fit earns. */
   def pointwiseEval(spark: SparkSession, dir: String): DataFrame = {
-    // consumed by the fit AND the scoring pass; same width/level
-    // discipline as the labeled pin inside labeledFeatures
+    // consumed by the fit AND the scoring pass; widened so both scans
+    // run at the session parallelism
     val feats = graft.Checkpoints.pinWide(labeledFeatures(spark, dir),
       graft.ParquetMeta.rowCount(spark, s"$dir/lineitem.parquet") * 4 * 48L)
     val fit = LogRegStep.newtonStep(feats, col("label") === 1,

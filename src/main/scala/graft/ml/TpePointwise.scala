@@ -84,26 +84,25 @@ object TpePointwise {
     // chain (r20 optimization round, guide §2.4 "share one exchange" —
     // replacing r19's round-robin widePin): the fact frame is
     // hash-repartitioned BY user_id at an explicit state-bound width
-    // BEFORE its pin, and localCheckpoint PRESERVES the physical
-    // plan's outputPartitioning, so HashPartitioning(user_id) — a
+    // BEFORE its pin, and a Checkpoints pin keeps the final adaptive
+    // plan's outputPartitioning (a raw localCheckpoint under AQE
+    // reports UnknownPartitioning), so HashPartitioning(user_id) — a
     // subset of every downstream key set — satisfies the clustering
-    // requirement of (a) the pos (user, item) distinct, (b) the ×16
-    // candidate explode's min-draw aggregate, and (c) BOTH sides of
-    // the candidate anti-join. r19's plan paid a separate exchange
-    // for each (the 9.6M-row cand aggregate shuffle alone moved
-    // 127 MB); now none of them shuffles, and the explicit partition
-    // count keeps AQE from narrowing the explode (the r19 fan-out
-    // blindness fix, by key instead of round-robin). The width is
-    // footer-derived (the covisit pairParts discipline), so it keeps
-    // sizing up at replica scale; per-user volume is basket-bounded,
-    // so the u-hash is uniform.
+    // requirement of (a) the pos (user, item) distinct and (b) the ×16
+    // candidate explode's (user, item) aggregate. r19's plan paid a
+    // separate exchange for each (the 9.6M-row cand aggregate shuffle
+    // alone moved 127 MB); now none of them shuffles, and the
+    // explicit partition count keeps AQE from narrowing the explode
+    // (the r19 fan-out blindness fix, by key instead of round-robin).
+    // The width is footer-derived (the covisit pairParts discipline),
+    // so it keeps sizing up at replica scale; per-user volume is
+    // basket-bounded, so the u-hash is uniform.
     val factRowsEst =
       graft.ParquetMeta.rowCount(spark, s"$dir/lineitem.parquet")
     val uParts = math.max(spark.sparkContext.defaultParallelism,
       math.min(4096L, factRowsEst / 250000L).toInt)
     def uPin(df: DataFrame, bytesPerRow: Long): DataFrame =
-      df.localCheckpoint(true,
-        graft.Checkpoints.adaptiveLevel(factRowsEst * bytesPerRow))
+      graft.Checkpoints.pin(df, factRowsEst * bytesPerRow)
     val oi = uPin(Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_orderdate")
       .join(Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey"),
@@ -114,7 +113,7 @@ object TpePointwise {
       .repartition(uParts, col("user_id")),
       40L) // the ONE fact join: feeds positives AND recency
     val pos = uPin(oi.select("user_id", "item_id").distinct(),
-      32L) // candidate anti-join + popularity + union; no exchange —
+      32L) // candidate aggregate + popularity; no exchange —
            // oi's u-partitioning already clusters (user, item)
     // max(p_partkey) as a driver literal (one dim-column agg job, r20):
     // drops the crossJoin(broadcast(ni)) exchange from the candidate

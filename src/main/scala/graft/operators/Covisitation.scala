@@ -82,34 +82,41 @@ object Covisitation {
     symmetricPairsFromBaskets(
       cappedBaskets(interactions, userCol, itemCol, maxBasket, parts))
 
-  /** Per-user sorted distinct item arrays, power-users above
+  /** [[baskets]] as (u, items) with long items, power-users above
     * `maxBasket` dropped whole — the ONE fact pass every
     * co-visitation consumer (pairs, degrees) derives from. Callers
     * that feed it to more than one consumer should `localCheckpoint`
-    * the result.
+    * the result. */
+  def cappedBaskets(interactions: DataFrame, userCol: String,
+                    itemCol: String, maxBasket: Int = 1000,
+                    parts: Int = 0): DataFrame =
+    baskets(interactions.select(col(userCol).as("u"),
+        col(itemCol).cast("long").as("i")), "u", "i", parts)
+      .filter(size(col("items")) <= maxBasket)
+
+  /** Per-user sorted distinct item arrays: (userCol, items), one row
+    * per user, uncapped. A null item is dropped by `collect_list`.
     *
     * Plan shape (r19 optimization round, guide §2.4/§2.5): the input
-    * is hash-repartitioned BY u with an EXPLICIT width up front —
-    * partitioning on u satisfies both the (u, i) dedup and the
-    * per-user collect, so the whole basket build runs off ONE
-    * exchange (was two), and the stage that EXPLODES the baskets into
-    * pairs (the chain's hottest: 2.2 of covisit_topk's 5.3 s,
-    * measured on the 2 partitions AQE had coalesced the small
+    * is hash-repartitioned BY the user with an EXPLICIT width up
+    * front — partitioning on the user satisfies both the (user, item)
+    * dedup and the per-user collect, so the whole basket build runs
+    * off ONE exchange (was two), and the stage that EXPLODES the
+    * baskets into pairs (the chain's hottest: 2.2 of covisit_topk's
+    * 5.3 s, measured on the 2 partitions AQE had coalesced the small
     * aggregate down to — AQE cannot see the ~40× pair fan-out of the
     * next operator) runs at the requested width. `parts` comes
     * state-bound from the gated callers (fact footer rows); 0 = the
     * session parallelism. */
-  def cappedBaskets(interactions: DataFrame, userCol: String,
-                    itemCol: String, maxBasket: Int = 1000,
-                    parts: Int = 0): DataFrame = {
+  def baskets(interactions: DataFrame, userCol: String, itemCol: String,
+              parts: Int = 0): DataFrame = {
     val n = if (parts > 0) parts
       else interactions.sparkSession.sparkContext.defaultParallelism
-    interactions
-      .select(col(userCol).as("u"), col(itemCol).cast("long").as("i"))
-      .repartition(n, col("u"))
+    interactions.select(userCol, itemCol)
+      .repartition(n, col(userCol))
       .distinct()
-      .groupBy("u").agg(sort_array(collect_list(col("i"))).as("items"))
-      .filter(size(col("items")) <= maxBasket)
+      .groupBy(userCol)
+      .agg(sort_array(collect_list(col(itemCol))).as("items"))
   }
 
   /** State-bound width for the basket build/explode: one partition

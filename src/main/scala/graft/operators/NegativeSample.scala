@@ -1,15 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Deterministic negative sampling for pointwise ranking / contrastive
   * training data: each observed (user, item) positive spawns k
   * pseudo-random candidate items from the catalog, candidates that
-  * collide with ANY of the user's positives are anti-joined away, and
-  * the survivors label 0 against the positives' 1 — the dataset shape
-  * a pointwise ranker trains on (the reference's pointwise leg,
+  * collide with ANY of the user's positives are dropped, and the
+  * survivors label 0 against the positives' 1 — the dataset shape a
+  * pointwise ranker trains on (the reference's pointwise leg,
   * /root/reference/MachineLearning/Ray/recsys/ray_train_pointwise.py,
   * consumes exactly such labeled pairs; its repair-domain generator
   * builds positives only, so the sampler is the missing scale piece).
@@ -21,79 +21,78 @@ import graft.Tables
   * positive (rejection without resampling — the deterministic choice
   * both engines agree on).
   *
-  * Scale shape: positives are one distinct shuffle; candidates are a
-  * map-side explode (×k); the collision filter is one anti-join on
-  * (user, item). The catalog size rides in as a broadcast scalar.
-  * Nothing quadratic, nothing driver-side.
+  * Scale shape: one user-keyed exchange builds each user's basket
+  * ([[Covisitation.baskets]]); one generator per basket row then emits
+  * the positives and the distinct candidates not in the basket — the
+  * rows the oracle's `DISTINCT` + anti-join produce, with no join. A
+  * row is as wide as one user's distinct items, and that width is not
+  * capped, since the labeled frame must be exact; it is a behavioral
+  * constant (~40 items here), not a corpus size. The catalog size
+  * rides in as a broadcast scalar.
   */
 object NegativeSample {
 
-  /** k deterministic non-colliding negatives per positive, as
-    * (userCol, itemCol) rows. `nItems` is the catalog size (items are
-    * assumed densely keyed 1..nItems, the TPC-H shape). */
-  def negatives(positives: DataFrame, userCol: String, itemCol: String,
-                nItems: Long, k: Int): DataFrame = {
-    require(k >= 1 && nItems >= 1, "k and catalog size must be positive")
-    val cands = positives.select(col(userCol), col(itemCol))
-      .withColumn("__j", explode(sequence(lit(0), lit(k - 1))))
-      .select(col(userCol),
-        expr(s"(($userCol * 131071L + $itemCol * 524287L + __j * 8191L)" +
-          s" % 1000003L) % ${nItems}L + 1L").as(itemCol))
-      .distinct()
-    cands.join(positives.select(userCol, itemCol),
-      Seq(userCol, itemCol), "left_anti")
-  }
+  /** Candidates drawn per positive by the gated instance. */
+  val K = 3
 
-  /** Labeled pointwise dataset: positives (label 1) ∪ sampled
-    * negatives (label 0). */
-  def pointwiseDataset(positives: DataFrame, userCol: String,
-                       itemCol: String, nItems: Long, k: Int): DataFrame =
-    positives.select(col(userCol), col(itemCol)).distinct()
-      .withColumn("label", lit(1))
-      .unionByName(
-        negatives(positives.select(col(userCol), col(itemCol)).distinct(),
-          userCol, itemCol, nItems, k)
-          .withColumn("label", lit(0)))
+  /** [[Covisitation.baskets]] of (user_id, item_id) purchases. A null
+    * key fails the call, naming its column: `collect_list` would drop
+    * the null item that a DISTINCT of the pairs keeps as a row. */
+  def baskets(purchases: DataFrame, parts: Int = 0): DataFrame =
+    Covisitation.baskets(
+      purchases.select(nonNull("user_id"), nonNull("item_id")),
+      "user_id", "item_id", parts)
+
+  private def nonNull(c: String): Column =
+    coalesce(col(c), raise_error(lit(s"NegativeSample: null $c"))).as(c)
+
+  /** Every labeled row of each [[baskets]] row, from one generator:
+    * (user_id, item_id, label, user_act). The positives are the basket
+    * (label 1); the negatives (label 0) are the distinct candidates of
+    * k draws per item against a catalog of `nItems` (items assumed
+    * densely keyed 1..nItems, the TPC-H shape) minus the basket;
+    * user_act is the basket size. */
+  def labeled(baskets: DataFrame, nItems: Column, k: Int): DataFrame = {
+    require(k >= 1, "k must be positive")
+    def draw(i: Column, j: Int): Column =
+      ((col("user_id") * 131071L + i * 524287L + j * 8191L) % 1000003L) %
+        nItems + 1L
+    val draws = flatten(transform(col("items"),
+      i => array((0 until k).map(draw(i, _)): _*)))
+    def rows(items: Column, label: Int): Column =
+      transform(items, i => struct(i.as("item_id"), lit(label).as("label")))
+    baskets.select(col("user_id"),
+        size(col("items")).cast("long").as("user_act"),
+        inline(concat(rows(col("items"), 1),
+          rows(array_except(draws, col("items")), 0))))
+      .select("user_id", "item_id", "label", "user_act")
+  }
 
   // ---- query-map entry (hash-gated) ----
 
-  /** Gated instance: purchases = distinct (customer, part) from
-    * orders⋈lineitem, catalog = the part table, k = 3. The catalog
-    * size is computed in-plan (single-row aggregate, broadcast scalar
-    * attachment). */
-  def negativeSampleOrders(spark: SparkSession, dir: String): DataFrame = {
-    // pos feeds the candidate explode, the anti-join AND the union's
-    // positive branch (plus, via union pruning, PointwiseRanker's two
-    // feature counts) — unpinned, the fact join + distinct executed
-    // once per consumer (r20 profiled: four identical 599k-row 3-task
-    // stages in pointwise_eval). One repartition(n, user_id) serves the
-    // distinct, and the pin keeps that partitioning: the candidate
-    // distinct and PointwiseRanker's user count read the pin where it
-    // is, with no exchange (the (user, item) anti-join still re-keys
-    // both sides: under the default requireAllClusterKeysForCoPartition
-    // a user-only partitioning cannot co-partition a two-key join).
-    // n is the footer-derived pairParts width (at least the session
-    // parallelism, so the consumers run wide); 24 B/row = 2 longs +
-    // row overhead, and the level adapts (SER/disk) at replica scale.
-    val pos = graft.Checkpoints.pin(
-      Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
+  /** The gated instance's baskets: distinct (customer, part) purchases
+    * from orders⋈lineitem, at the footer-derived pairParts width. */
+  private[graft] def orderBaskets(spark: SparkSession, dir: String): DataFrame =
+    baskets(Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
         .join(Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey"),
           col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id"))
-        .repartition(Covisitation.pairParts(spark, dir), col("user_id"))
-        .distinct(),
-      graft.ParquetMeta.rowCount(spark, s"$dir/lineitem.parquet") * 24L)
+        .select(col("o_custkey").as("user_id"), col("l_partkey").as("item_id")),
+      Covisitation.pairParts(spark, dir))
+
+  /** [[labeled]] over `baskets` against the part catalog, k = [[K]].
+    * The catalog size is computed in-plan (single-row aggregate,
+    * broadcast scalar attachment). */
+  private[graft] def labeledOrders(spark: SparkSession, dir: String,
+                                   baskets: DataFrame): DataFrame = {
     val ni = Tables.part(spark, dir).agg(max("p_partkey").as("__n"))
-    val cands = pos.crossJoin(broadcast(ni))
-      .withColumn("__j", explode(sequence(lit(0), lit(2))))
-      .select(col("user_id"),
-        expr("((user_id * 131071L + item_id * 524287L + __j * 8191L)" +
-          " % 1000003L) % __n + 1L").as("item_id"))
-      .distinct()
-    val neg = cands.join(pos, Seq("user_id", "item_id"), "left_anti")
-    pos.withColumn("label", lit(1))
-      .unionByName(neg.withColumn("label", lit(0)))
+    labeled(baskets.crossJoin(broadcast(ni)), col("__n"), K)
   }
+
+  /** Gated instance: purchases = distinct (customer, part) from
+    * orders⋈lineitem, catalog = the part table, k = 3. */
+  def negativeSampleOrders(spark: SparkSession, dir: String): DataFrame =
+    labeledOrders(spark, dir, orderBaskets(spark, dir))
+      .select("user_id", "item_id", "label")
 
   def oracleSql: String =
     """WITH pos AS (

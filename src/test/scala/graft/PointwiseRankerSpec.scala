@@ -1,11 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.ml.{LogRegStep, PointwiseRanker}
 import graft.operators.RankMetrics
 
 /** The pointwise fit step + leaderboard composition. */
-class PointwiseRankerSpec extends SparkSpec {
+class PointwiseRankerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("planted signal: popularity separates labels, the step finds it") {
@@ -58,5 +65,24 @@ class PointwiseRankerSpec extends SparkSpec {
     assert(r.getAs[Long]("mean_rr_micros") <= 1000000L)
     val again = PointwiseRanker.pointwiseEval(spark, sfDir).collect()(0)
     assert(r.toString === again.toString)
+  }
+
+  test("pointwise_fit: no build job or pin, one user exchange read twice, no anti-join") {
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    var fit: DataFrame = null
+    assert(jobsDuring { fit = PointwiseRanker.pointwiseFit(spark, sfDir) } === 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinned)
+    fit.collect()
+    val plan = fit.queryExecution.executedPlan
+    def byUser(e: ShuffleExchangeExec) = e.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
+      case _ => false
+    }
+    val userExchanges = collect(plan) { case e: ShuffleExchangeExec if byUser(e) => e }
+    assert(userExchanges.size === 1, plan.treeString)
+    val reused = collect(plan) { case r: ReusedExchangeExec => r.child }
+    assert(reused === userExchanges, plan.treeString)
+    assert(collect(plan) { case j: BaseJoinExec if j.joinType == LeftAnti => j }
+      .isEmpty, plan.treeString)
   }
 }
