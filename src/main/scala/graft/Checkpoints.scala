@@ -97,10 +97,10 @@ object Checkpoints {
     * frame small enough to coalesce. And a partitioning with attributes
     * costs AQE's exchange reuse between two instances of the pin in one
     * plan: `RDDScanExec`'s canonical form keeps the partitioning's
-    * attribute ids, which differ per instance. Carried, the coalesced
-    * curation stage pins of the sf0.01 documents made ImportanceSelect
-    * over them run 16 jobs instead of 13 (its importance aggregate ran
-    * twice instead of being reused). */
+    * attribute ids, which differ per instance. Where it was measured,
+    * carrying it spared nothing: over the sf0.01 documents AQE coalesces
+    * two of the curation pipeline's stage pins, and its build runs 51
+    * jobs with their coalesced partitioning carried or left unknown. */
   private def checkpoint(df: DataFrame, level: Option[StorageLevel]): DataFrame = {
     val pinned = level.fold(df.localCheckpoint())(df.localCheckpoint(true, _))
     (df.queryExecution.executedPlan, pinned.queryExecution.logical) match {

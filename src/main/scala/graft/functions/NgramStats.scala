@@ -12,12 +12,15 @@ import graft.Tables
   * these are the lexical-statistics complements used by the public
   * corpus-cleaning pipelines).
   *
-  * All three are shaped for 100 TB: bigrams are generated MAP-SIDE from
-  * each document's token array (a `transform` over an index sequence —
-  * no self-join, nothing quadratic), corpus aggregates shuffle on
-  * uniform token/bigram keys with map-side partial aggregation, and
+  * All are shaped for 100 TB: bigrams are generated MAP-SIDE from each
+  * document's token array (a `transform` over an index sequence — no
+  * self-join, nothing quadratic). The corpus statistics (PMI, the
+  * surprisals, the pair and next-token tables) shuffle on uniform
+  * token/bigram keys with map-side partial aggregation, and
   * corpus-level constants (N, V) ride a broadcast single-row frame into
-  * the plan rather than a driver collect. Scores are exact integers or
+  * the plan rather than a driver collect. The repetition signals read
+  * only one document's tokens, so they are a projection and never
+  * shuffle. Scores are exact integers or
   * integer MICROS computed per row from exact-integer inputs, so the
   * cross-engine hash gate never rides on float-sum ordering.
   */
@@ -126,26 +129,45 @@ object NgramStats {
     * token count, distinct-token count, most-frequent-token count,
     * most-frequent-bigram count, duplicated-bigram type count and the
     * tokens they cover. Docs with ≥1 token appear; bigram columns are 0
-    * for single-token docs. One shuffle keyed on (doc, gram) then (doc)
-    * — uniform keys, cardinality bounded by corpus token count. */
+    * for single-token docs. Every signal reads one document's own
+    * tokens, so all six are one projection over the token array: counts
+    * are run lengths over the SORTED tokens and the sorted bigrams. No
+    * explode, no aggregate, no shuffle. */
   def repetitionSignals(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame = {
-    val withToks = docs.select(col(idCol).as("doc_id"), toks(col(textCol)).as("__ts"))
-    val uniDoc = withToks.select(col("doc_id"), explode(col("__ts")).as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
-        max("c").as("top_token_n"))
-    val bigDoc = withToks
-      .select(col("doc_id"), explode(bigramArr(col("__ts"))).as("b"))
-      .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(max("c").as("top_bigram_n"),
-        sum(when(col("c") >= 2, 1L).otherwise(0L)).as("dup_bigram_types"),
-        sum(when(col("c") >= 2, col("c")).otherwise(0L)).as("dup_bigram_n"))
-    uniDoc.join(bigDoc, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("top_bigram_n", "dup_bigram_types", "dup_bigram_n"))
+    val ts = col("__ts")
+    // a doc has a token iff its lowercased text has an [a-z0-9] char:
+    // the same test as size(tokens) > 0, without a second tokenize pass
+    // where the optimizer pushes the filter below the projection
+    docs.filter(lower(col(textCol)).rlike("[a-z0-9]"))
+      .select(col(idCol).as("doc_id"), toks(col(textCol)).as("__ts"))
+      .select(col("doc_id"), size(ts).cast("long").as("n_tokens"),
+        size(array_distinct(ts)).cast("long").as("n_types"),
+        runStats(array_sort(ts), "string")("top").as("top_token_n"),
+        runStats(array_sort(bigramArr(ts)), "struct<w1:string,w2:string>")
+          .as("__b"))
+      .select(col("doc_id"), col("n_tokens"), col("n_types"),
+        col("top_token_n"), col("__b.top").as("top_bigram_n"),
+        col("__b.dup_types").as("dup_bigram_types"),
+        col("__b.dup_n").as("dup_bigram_n"))
   }
+
+  /** Run statistics of a sorted array of `elemType` in one left fold:
+    * the longest run (`top`), the number of runs of length ≥ 2
+    * (`dup_types`) and the elements those runs hold (`dup_n`). A run
+    * counts when it reaches 2 (+1 type, +2 elements); each further
+    * element adds 1. All 0 for an empty array. */
+  private def runStats(sorted: Column, elemType: String): Column =
+    aggregate(sorted,
+      struct(lit(null).cast(elemType).as("prev"), lit(0L).as("run"),
+        lit(0L).as("top"), lit(0L).as("dup_types"), lit(0L).as("dup_n")),
+      (acc, x) => {
+        val run = when(acc("prev") === x, acc("run") + 1L).otherwise(1L)
+        struct(x.as("prev"), run.as("run"), greatest(acc("top"), run).as("top"),
+          (acc("dup_types") + when(run === 2L, 1L).otherwise(0L)).as("dup_types"),
+          (acc("dup_n") + when(run === 2L, 2L).when(run > 2L, 1L).otherwise(0L))
+            .as("dup_n"))
+      })
 
   /** Per-document unigram-LM surprisal (the CCNet perplexity-filter
     * shape, with the LM trained on the corpus itself): add-one-smoothed

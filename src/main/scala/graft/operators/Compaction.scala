@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{ParquetMeta, Tables}
+import graft.{ParquetMeta, Tables, TmpPaths}
 
 /** Small-file compaction: rewrite a parquet dataset to a target file size
   * — the parquet analogue of the reference's Delta OPTIMIZE/autoCompact
@@ -50,9 +50,11 @@ object Compaction {
 
   /** Scatter orders into many small files, compact them back to one
     * target-sized set, and return the read-back — the oracle asserts the
-    * round trip preserved every row. */
+    * round trip preserved every row. The scratch dir is unique to the
+    * call ([[TmpPaths.unique]]), so two processes compacting the same
+    * `dir` never share (and clear) each other's files. */
   def compactionOrders(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = s"/tmp/graft_compaction/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val scratch = TmpPaths.unique("graft_compaction")
     Tables.orders(spark, dir).repartition(64)
       .write.mode("overwrite").parquet(s"$scratch/small")
     compact(spark, s"$scratch/small", s"$scratch/compacted",

@@ -30,12 +30,22 @@ import graft.Tables
   * deterministic, no seeded sampler whose kept-set drifts with
   * partitioning. A degenerate corpus (max = min) keeps everything.
   *
-  * Scale shape: one corpus tokenize pass; word counts shuffle on the
-  * word key (vocab-bounded output; at 100 TB the word key would be a
-  * hashed n-gram bucket — DSIR's own construction — changing bytes
-  * shuffled, not semantics); the per-doc score is one shuffle on
-  * doc_id; min/max is one scalar aggregate broadcast back. Nothing
-  * corpus-quadratic, no global sort, no driver-side weight table.
+  * Scale shape: the caller's text is tokenized twice and no token is
+  * stored. One tokenize pass feeds the vocabulary aggregate, which
+  * shuffles on the word key after a map-side partial count
+  * (vocab-bounded output; at 100 TB the word key would be a hashed
+  * n-gram bucket — DSIR's own construction — changing bytes shuffled,
+  * not semantics); AQE runs the vocabulary's exchange once and reads it
+  * back for both the totals row and the lw table. The second pass joins
+  * each token to its lw and sums per doc: Σ_w c_doc(w)·lw(w) is the sum
+  * of lw over the doc's tokens, so no (doc, word) count forms and the
+  * partial aggregate collapses each doc to one row before the doc_id
+  * exchange. min/max is one scalar aggregate broadcast back. The
+  * exploded word frame is NOT pinned: it has a row per token and is
+  * larger than the text it came from, so re-splitting the text (which
+  * the curation pipeline already holds in a stage pin) costs less than
+  * storing that frame and scanning it twice. Nothing corpus-quadratic,
+  * no global sort, no driver-side weight table.
   */
 object ImportanceSelect {
 
@@ -51,14 +61,11 @@ object ImportanceSelect {
     require(Seq("long", "integer", "short", "byte").contains(idType.typeName),
       s"importanceSelect: idCol '$idCol' must be integral (got $idType) — " +
         "the portableBucket acceptance draw is modular integer arithmetic")
-    val words = docs
-      .select(col(idCol), isTarget.as("__tgt"),
-        explode(split(col(textCol), "\\s+")).as("__w"))
-      .localCheckpoint() // feeds vocab counts AND doc-word counts
+    val words = docs.select(col(idCol), isTarget.as("__tgt"),
+      explode(split(col(textCol), "\\s+")).as("__w"))
     val vocab = words.groupBy(col("__w"))
       .agg(count(lit(1)).as("__cs"),
         sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"))
-      .localCheckpoint() // totals aggregate AND the lw join
     val totals = vocab.agg(
       sum(col("__cs")).as("__ns"), sum(col("__ct")).as("__nt"),
       count(lit(1)).as("__v"))
@@ -68,12 +75,9 @@ object ImportanceSelect {
         log((col("__ct") + 1).cast("double") * (col("__ns") + col("__v")).cast("double")
           / ((col("__cs") + 1).cast("double") * (col("__nt") + col("__v")).cast("double")))
           * lit(1e6)).cast("long").as("__lw"))
-    val docWords = words.groupBy(col(idCol), col("__w"))
-      .agg(count(lit(1)).as("__c"))
-    val imp = docWords.join(lw, "__w")
+    val imp = words.join(lw, "__w")
       .groupBy(col(idCol))
-      .agg(sum(col("__c")).as("n_tokens"),
-        sum(col("__c") * col("__lw")).as("importance_micros"))
+      .agg(count(lit(1)).as("n_tokens"), sum(col("__lw")).as("importance_micros"))
     val bounds = imp.agg(min(col("importance_micros")).as("__mn"),
       max(col("importance_micros")).as("__mx"))
     imp.crossJoin(broadcast(bounds))

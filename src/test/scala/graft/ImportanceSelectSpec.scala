@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.ImportanceSelect
 
@@ -69,5 +70,78 @@ class ImportanceSelectSpec extends SparkSpec {
     // selection is nontrivial on the synthetic corpus: some in, some out
     val sel = out.filter(col("selected")).count()
     assert(sel > 0 && sel < out.count(), s"degenerate selection: $sel")
+  }
+
+  /** The earlier form, kept as the reference: the exploded words and
+    * the vocabulary each pinned, a (doc, word) count, then Σ c·lw. */
+  private def pinnedReference(docs: DataFrame, idCol: String, textCol: String,
+                              isTarget: Column): DataFrame = {
+    val words = docs.select(col(idCol), isTarget.as("__tgt"),
+        explode(split(col(textCol), "\\s+")).as("__w"))
+      .localCheckpoint()
+    val vocab = words.groupBy(col("__w"))
+      .agg(count(lit(1)).as("__cs"),
+        sum(when(col("__tgt"), 1L).otherwise(0L)).as("__ct"))
+      .localCheckpoint()
+    val totals = vocab.agg(sum(col("__cs")).as("__ns"),
+      sum(col("__ct")).as("__nt"), count(lit(1)).as("__v"))
+    val lw = vocab.crossJoin(broadcast(totals))
+      .select(col("__w"), round(
+        log((col("__ct") + 1).cast("double") * (col("__ns") + col("__v")).cast("double")
+          / ((col("__cs") + 1).cast("double") * (col("__nt") + col("__v")).cast("double")))
+          * lit(1e6)).cast("long").as("__lw"))
+    val imp = words.groupBy(col(idCol), col("__w")).agg(count(lit(1)).as("__c"))
+      .join(lw, "__w").groupBy(col(idCol))
+      .agg(sum(col("__c")).as("n_tokens"),
+        sum(col("__c") * col("__lw")).as("importance_micros"))
+    val bounds = imp.agg(min(col("importance_micros")).as("__mn"),
+      max(col("importance_micros")).as("__mx"))
+    imp.crossJoin(broadcast(bounds))
+      .withColumn("selected", expr(
+        s"""__mx = __mn OR
+           |  (((($idCol % 100003) * 1103515245 + 12345) % 1000000 + 1000000) % 1000000)
+           |    * (__mx - __mn) < (importance_micros - __mn) * 1000000
+           |""".stripMargin))
+      .select(col(idCol), col("n_tokens"), col("importance_micros"), col("selected"))
+  }
+
+  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.columns.toSeq == b.columns.toSeq)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      s"${a.collect().toSeq} vs ${b.collect().toSeq}")
+  }
+
+  test("per-token score equals the pinned (doc, word)-count reference") {
+    // repeated words inside a doc, a leading space (split yields an
+    // empty token, which is a vocabulary word like any other), and ids
+    // that spread the acceptance draw
+    val docs = Seq(
+      (1L, "alpha alpha alpha beta", true),
+      (2L, " alpha beta beta", true),
+      (3L, "gamma gamma beta gamma gamma", false),
+      (4L, "  delta alpha", false),
+      (57L, "gamma delta delta delta delta", false),
+      (1234567L, "alpha", false)
+    ).toDF("doc_id", "text", "tgt")
+    val got = ImportanceSelect.importanceSelect(docs, "doc_id", "text", col("tgt"))
+    assertSameRows(got, pinnedReference(docs, "doc_id", "text", col("tgt")))
+    assert(got.filter(col("doc_id") === 2L).head().getLong(1) == 4L,
+      "the leading space's empty token is counted")
+    // a one-word vocabulary: every doc scores the same multiple of lw
+    val one = Seq((1L, "zz zz"), (2L, "zz"), (3L, "zz zz zz")).toDF("doc_id", "text")
+    assertSameRows(
+      ImportanceSelect.importanceSelect(one, "doc_id", "text", col("doc_id") === 1L),
+      pinnedReference(one, "doc_id", "text", col("doc_id") === 1L))
+  }
+
+  test("building and running over an in-memory frame stores no RDD block") {
+    val docs = Seq((1L, "a b a c"), (2L, "b c c"), (3L, "a d d d"))
+      .toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = ImportanceSelect.importanceSelect(docs, "doc_id", "text",
+      col("doc_id") === 1L)
+    assert(out.collect().length == 3)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"pinned RDDs: $added")
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Compaction, EmbedDocs, Sampling}
 
@@ -51,9 +53,26 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.count() == orig.count())
     assert(out.agg(sum(col("o_orderkey"))).as[Long].head() ==
       orig.agg(sum(col("o_orderkey"))).as[Long].head())
-    val scratch = s"/tmp/graft_compaction/${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val scratch = scratchOf(out)
     assert(Compaction.dataFileCount(spark, s"$scratch/small") == 64)
     assert(Compaction.dataFileCount(spark, s"$scratch/compacted") == 1)
+  }
+
+  /** The call's scratch dir: the parent of the read-back's `compacted`. */
+  private def scratchOf(out: DataFrame): String =
+    new Path(out.inputFiles.head).getParent.getParent.toUri.getPath
+
+  test("compaction stages each call under its own tmp dir, rows unchanged") {
+    val first = scratchOf(Compaction.compactionOrders(spark, sfDir))
+    val out = Compaction.compactionOrders(spark, sfDir)
+    val second = scratchOf(out)
+    assert(first != second)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath
+    Seq(first, second).foreach(p =>
+      assert(new java.io.File(p).getParentFile.getCanonicalPath == tmp,
+        s"$p is not under $tmp"))
+    val orig = Tables.orders(spark, sfDir).select(out.columns.map(col): _*)
+    assert(out.exceptAll(orig).isEmpty && orig.exceptAll(out).isEmpty)
   }
 
   test("embed plumbing: dim, unit norm, determinism, batch-size independence") {
