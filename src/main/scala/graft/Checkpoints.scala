@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, PinnedFrames}
+import org.apache.spark.sql.{Column, DataFrame, Observation, PinnedFrames, Row}
 import org.apache.spark.sql.catalyst.plans.physical.{CoalescedHashPartitioning, Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** The pin API: eager `localCheckpoint`s, at a storage level tiered
   * from a size estimate, or at the default level with the row count
@@ -129,15 +131,27 @@ object Checkpoints {
     * (its pin, or the pin of a frame derived from it: an input count
     * riding a filtered stage's pin), and blocks until then. */
   def observeRows(df: DataFrame): (DataFrame, () => Long) = {
-    val rows = Observation()
-    (df.observe(rows, count(lit(1)).as("rows")),
-      () => rows.get("rows").asInstanceOf[Long])
+    val (observed, row) = observe(df, Seq(rowCount))
+    (observed, () => row().getLong(0))
   }
 
-  /** Eager default-level `localCheckpoint()` plus the frame's row count,
-    * taken by an observed metric in the pin's own job. A `.count()`
-    * after the pin would run two more jobs (AQE runs the count's
+  /** `df` with named aggregate `metrics` attached; the thunk returns
+    * their values, in order, as [[observeRows]] returns its count. */
+  private def observe(df: DataFrame, metrics: Seq[Column]): (DataFrame, () => Row) = {
+    val obs = Observation()
+    (df.observe(obs, metrics.head, metrics.tail: _*),
+      () => Await.result(obs.future, Duration.Inf))
+  }
+
+  /** Eager default-level `localCheckpoint()` plus the values of the
+    * named aggregate `metrics` over the frame (e.g.
+    * `min(k).as("lo")`), in order, observed in the pin's own job. An
+    * aggregate over the pin would run two more jobs (AQE runs its
     * shuffle map stage and its final stage separately). */
+  def pinObserved(df: DataFrame, metrics: Column*): (DataFrame, Row) =
+    observed(df, None, metrics)
+
+  /** [[pinObserved]] of the frame's row count. */
   def pinCounted(df: DataFrame): (DataFrame, Long) = counted(df, None)
 
   /** [[pin]] plus the frame's row count, observed as in [[pinCounted]]. */
@@ -145,8 +159,16 @@ object Checkpoints {
     counted(df, Some(adaptiveLevel(estBytes)))
 
   private def counted(df: DataFrame, level: Option[StorageLevel]): (DataFrame, Long) = {
-    val (observed, rows) = observeRows(df)
-    (checkpoint(observed, level), rows())
+    val (pinned, row) = observed(df, level, Seq(rowCount))
+    (pinned, row.getLong(0))
+  }
+
+  private def rowCount: Column = count(lit(1)).as("rows")
+
+  private def observed(df: DataFrame, level: Option[StorageLevel],
+                       metrics: Seq[Column]): (DataFrame, Row) = {
+    val (withMetrics, row) = observe(df, metrics)
+    (checkpoint(withMetrics, level), row())
   }
 
   /** [[pin]] with a width floor, decided from the ESTIMATE in ONE

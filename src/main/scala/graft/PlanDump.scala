@@ -1,12 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainUtils, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Measurement tooling for the optimization rounds (guide §1): dumps
-  * `.explain("formatted")` for named query keys to files so plan claims
-  * (Exchange counts, join strategies, PushedFilters) are checkable
+/** Measurement tooling for the optimization rounds (guide §1): dumps the
+  * formatted explain of named query keys' EXECUTED plans to files so plan
+  * claims (Exchange counts, join strategies, PushedFilters) are checkable
   * without running Spark. Session config matches [[Bench]] exactly —
   * the captured plan is the benched plan.
+  *
+  * Each key's frame first runs to completion through its own executed
+  * plan, its rows dropped as the `noop` sink drops them. The dump is then
+  * AQE's final plan, without the initial plan beside it: runtime changes
+  * (broadcast conversion, coalesced reads) show, and a subtree read twice
+  * shows once plus a `ReusedExchange`.
   *
   * Usage: PlanDump <outDir> <suffix> key1 key2 ...
   * Writes <outDir>/<key>_<suffix>.txt.
@@ -31,11 +38,18 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (key <- keys) {
       spark.sparkContext.setJobDescription(s"plandump: $key")
-      val df = SparkEntry.queries(key)(spark, sfDir)
-      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val qe = SparkEntry.queries(key)(spark, sfDir).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some(s"plandump: $key")) {
+        qe.executedPlan.execute().foreach(_ => ())
+      }
+      val finalPlan = qe.executedPlan.transformUpWithSubqueries {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+      }
+      val txt = new StringBuilder("== Physical Plan ==\n")
+      ExplainUtils.processPlan(finalPlan, s => { txt.append(s); () })
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${key}_$suffix.txt"),
-        txt.getBytes("UTF-8"))
+        txt.toString.getBytes("UTF-8"))
       // free any checkpoint blocks the construction pinned
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

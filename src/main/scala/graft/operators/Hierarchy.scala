@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Checkpoints, Tables}
 
 /** Parent-child hierarchy flattening (transitive closure).
   *
@@ -21,32 +21,32 @@ object Hierarchy {
     * root>…>node. `maxDepth` bounds runaway cycles. */
   def flatten(edges: DataFrame, childCol: String, parentCol: String,
               maxDepth: Int = 20): DataFrame = {
-    val e = edges.select(col(childCol).as("__c"), col(parentCol).as("__p")).cache()
-    // Each level is localCheckpoint'ed: lineage is truncated so the plan
-    // tree stays O(1) per level (not O(depth)), the per-level isEmpty
-    // action reuses the materialized partitions instead of re-running the
-    // whole join chain, and the final union never recomputes a level.
-    var frontier = e.filter(col("__p").isNull)
+    // two pruned columns of the source scan, re-read by each level's
+    // join: no cache
+    val e = edges.select(col(childCol).as("__c"), col(parentCol).as("__p"))
+    // Each level is one counted pin: lineage is truncated so the plan
+    // tree stays O(1) per level (not O(depth)), the row count observed
+    // in the pin's own job ends the loop at the first empty level (no
+    // probe job), and the final union never recomputes a level.
+    val (roots, rootRows) = Checkpoints.pinCounted(e.filter(col("__p").isNull)
       .select(col("__c").as("node"),
               col("__c").as("root_key"),
               lit(0).as("depth"),
-              col("__c").cast("string").as("path"))
-      .localCheckpoint()
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var level = 0
-    var more = !frontier.isEmpty
-    while (more && level < maxDepth) {
-      frontier = e.join(frontier.withColumnRenamed("node", "__pn"),
-          col("__p") === col("__pn"))
-        .select(col("__c").as("node"), col("root_key"),
-                (col("depth") + 1).as("depth"),
-                concat(col("path"), lit(">"), col("__c").cast("string")).as("path"))
-        .localCheckpoint()
-      // one tiny action per level; level count == hierarchy depth
-      if (frontier.isEmpty) more = false
-      else { levels += frontier; level += 1 }
+              col("__c").cast("string").as("path")))
+    val levels = scala.collection.mutable.ArrayBuffer(roots)
+    var (frontier, rows) = (roots, rootRows)
+    // levels holds depths 0 until levels.size; the loop count is the
+    // hierarchy depth
+    while (rows > 0 && levels.size <= maxDepth) {
+      val (next, nextRows) = Checkpoints.pinCounted(
+        e.join(frontier.withColumnRenamed("node", "__pn"),
+            col("__p") === col("__pn"))
+          .select(col("__c").as("node"), col("root_key"),
+                  (col("depth") + 1).as("depth"),
+                  concat(col("path"), lit(">"), col("__c").cast("string")).as("path")))
+      if (nextRows > 0) levels += next
+      frontier = next; rows = nextRows
     }
-    e.unpersist()
     levels.reduce(_ unionAll _)
   }
 

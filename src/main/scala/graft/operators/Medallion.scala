@@ -14,12 +14,15 @@ import graft.Tables
   * currentVersion / effectiveDate / expirationDate (the SCD2 envelope the
   * silver tier's merge consumes).
   *
-  * Scale shape: name cleanup is metadata-only; the dedup `distinct` is the
-  * one shuffle (hash on all columns — uniform); sourceFile comes from the
-  * scan's file metadata, not a UDF, so lineage costs nothing. Housekeeping
-  * dates are parameters, not current_timestamp(), keeping the operator
-  * deterministic and replayable (idempotent re-runs produce identical
-  * bronze — the property the reference gets from Delta overwrite).
+  * Scale shape: name cleanup is metadata-only; bronze's dedup `distinct`
+  * is its one shuffle (hash on all columns — uniform); sourceFile comes
+  * from the scan's file metadata, not a UDF, so lineage costs nothing.
+  * Silver moves the fact rows through one exchange, on the surrogate
+  * key's bucket, and skips bronze's `distinct` (see [[silverApply]]).
+  * Housekeeping dates are parameters, not current_timestamp(), keeping
+  * the operator deterministic and replayable (idempotent re-runs produce
+  * identical bronze — the property the reference gets from Delta
+  * overwrite).
   */
 object Medallion {
 
@@ -32,17 +35,22 @@ object Medallion {
     * @param asOfDateKey yyyymmdd int stamped as effectiveDate
     */
   def bronzeNormalize(raw: DataFrame, dropCols: Seq[String],
-                      asOfDateKey: Int): DataFrame = {
-    val dropped = raw.drop(dropCols: _*)
-    val renamed = ColumnNames.camelCase(dropped)
-    renamed
+                      asOfDateKey: Int): DataFrame =
+    withEnvelope(bronzeColumns(raw, dropCols).distinct(), asOfDateKey)
+
+  /** Bronze's projection of `raw`, before the exact-row dedup. */
+  private def bronzeColumns(raw: DataFrame, dropCols: Seq[String]): DataFrame =
+    ColumnNames.camelCase(raw.drop(dropCols: _*))
       .withColumn("sourceFile",
         element_at(split(col("_metadata.file_path"), "/"), -1))
-      .distinct()
+
+  /** Stamped after the dedup: literal columns in its grouping key would
+    * only widen the shuffle. */
+  private def withEnvelope(rows: DataFrame, asOfDateKey: Int): DataFrame =
+    rows
       .withColumn("currentVersion", lit(1))
       .withColumn("effectiveDate", lit(asOfDateKey))
       .withColumn("expirationDate", lit(FarFuture))
-  }
 
   /** Silver tier: one current row per natural key + a surrogate primary
     * key — the counterpart of the reference's silver table shape
@@ -60,28 +68,45 @@ object Medallion {
     * the join back is AQE-broadcast. Deterministic and replayable:
     * re-running silver yields identical keys.
     *
+    * Scale shape: ONE exchange of the fact rows, `hashpartitioning` on the
+    * bucket, at the session's partition count (AQE coalesces it). The
+    * latest-wins window partitions by bucket + natural key, which groups
+    * exactly as the key alone does because the bucket is a function of
+    * the key, and the in-bucket row number partitions by the bucket: both
+    * read that one exchange. The offsets branch prunes to the key columns,
+    * so it shuffles only those on the bucket, counts per bucket with no
+    * further exchange, and its single-partition window holds one row per
+    * bucket. Latest-wins also subsumes an exact-row dedup: identical rows
+    * share a natural key, and one row per key survives, so bronze's
+    * `distinct` need not run first (it would cost an all-column exchange).
+    *
     * @param rangeBucket integer expression MONOTONE in natural-key order
     *                    (e.g. `floor(key/1000)`) — bucket order must equal
     *                    key order for the offsets to linearize correctly */
   def silverApply(bronze: DataFrame, naturalKeys: Seq[String], skCol: String,
                   rangeBucket: Column): DataFrame = {
     val keyCols = naturalKeys.map(col)
-    // latest envelope wins per natural key (bronze may hold re-arrivals)
-    val wLatest = Window.partitionBy(keyCols: _*)
+    // the one fact exchange: every later step groups by a key the
+    // bucket is a function of
+    val bucketed = bronze.withColumn("__bucket", rangeBucket)
+      .repartition(col("__bucket"))
+    // latest envelope wins per natural key (bronze may hold re-arrivals
+    // and exact duplicates); adding the bucket leaves the groups as
+    // they are and lets the window read the bucket partitioning
+    val wLatest = Window.partitionBy(col("__bucket") +: keyCols: _*)
       .orderBy(col("effectiveDate").desc, col("currentVersion").desc)
-    val current = bronze.withColumn("__v", row_number().over(wLatest))
+    val current = bucketed.withColumn("__v", row_number().over(wLatest))
       .filter(col("__v") === 1).drop("__v")
 
-    val bucketed = current.withColumn("__bucket", rangeBucket)
     val wIn = Window.partitionBy(col("__bucket")).orderBy(keyCols: _*)
     // one row per bucket: the single-partition rollup window scans only
     // #buckets rows, never fact rows
     val wRoll = Window.orderBy(col("__bucket"))
-    val offsets = bucketed.groupBy("__bucket").agg(count(lit(1)).as("__n"))
+    val offsets = current.groupBy("__bucket").agg(count(lit(1)).as("__n"))
       .withColumn("__offset",
         coalesce(sum(lag("__n", 1).over(wRoll)).over(wRoll), lit(0L)))
       .drop("__n")
-    bucketed
+    current
       .withColumn("__rn", row_number().over(wIn))
       .join(offsets, "__bucket")
       .withColumn(skCol, (col("__offset") + col("__rn")).cast("long"))
@@ -101,7 +126,9 @@ object Medallion {
 
   def medallionBronzeOrders(spark: SparkSession, dir: String): DataFrame =
     bronzeNormalize(Tables.orders(spark, dir), dropCols = Nil,
-      asOfDateKey = 20240101)
+      asOfDateKey = OrdersAsOf)
+
+  private val OrdersAsOf = 20240101
 
   /** The oracle runs over per-table views, so the filename is asserted as
     * the known literal (each test table is a single `<name>.parquet`) —
@@ -118,8 +145,11 @@ object Medallion {
 
   // ---- query-map entries: silver + gold tiers ----
 
+  /** Silver reads bronze's rows without the exact-row dedup: latest-wins
+    * keeps one row per natural key, and exact duplicates share one. */
   def medallionSilverOrders(spark: SparkSession, dir: String): DataFrame =
-    silverApply(medallionBronzeOrders(spark, dir),
+    silverApply(
+      withEnvelope(bronzeColumns(Tables.orders(spark, dir), Nil), OrdersAsOf),
       naturalKeys = Seq("oOrderkey"), skCol = "orderSk",
       rangeBucket = floor(col("oOrderkey") / 1000).cast("long"))
 

@@ -705,9 +705,10 @@ object VersionedTable {
       require(integralKey(changes, keyCol),
         s"zonemap key '$keyCol' must be an integral column " +
           "(the sidecar contract); use upsert() for other key types")
-      val ch = changes.localCheckpoint() // range scan + merge, one eval
-      val mm = ch.agg(min(col(keyCol)).cast("long"),
-        max(col(keyCol)).cast("long")).collect()(0)
+      // range scan + merge read one eval; the key range rides its job
+      val (ch, mm) = graft.Checkpoints.pinObserved(changes,
+        min(col(keyCol)).cast("long").as("lo"),
+        max(col(keyCol)).cast("long").as("hi"))
       require(!mm.isNullAt(0), "empty or all-null-key changeset")
       val (clo, chi) = (mm.getLong(0), mm.getLong(1))
       var attempt = 0
@@ -998,7 +999,8 @@ object VersionedTable {
   def tableMergePruned(spark: SparkSession, dir: String): DataFrame = {
     val table = graft.TmpPaths.unique("graft_vtable_mp")
     val o = ordersFrame(spark, dir).select(col("k"), col("cents"))
-    val m = o.agg(max(col("k"))).collect()(0).getLong(0)
+    val m = graft.ParquetMeta.keyRange(spark, s"$dir/orders.parquet", "o_orderkey")
+      .map(_._2).getOrElse(o.agg(max(col("k"))).collect()(0).getLong(0))
     val (t1, t2) = (m / 3, 2 * m / 3)
     appendKeyed(spark, table, o.filter(col("k") <= t1), "k")
     appendKeyed(spark, table,

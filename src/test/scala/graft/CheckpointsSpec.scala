@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.apache.spark.storage.StorageLevel
 
 class CheckpointsSpec extends SparkSpec {
@@ -52,6 +52,16 @@ class CheckpointsSpec extends SparkSpec {
     val counted = jobsDuring { Checkpoints.pinCounted(multiPartition); () }
     assert(plain >= 1)
     assert(counted == plain, s"pinCounted ran $counted jobs, localCheckpoint() $plain")
+  }
+
+  test("pinObserved returns its metrics in order, in the jobs of a plain localCheckpoint") {
+    val metrics = Seq(max(col("id")).as("hi"), min(col("id")).as("lo"))
+    var row: Row = null
+    val observed = jobsDuring { row = Checkpoints.pinObserved(multiPartition, metrics: _*)._2 }
+    assert(row == multiPartition.agg(metrics.head, metrics.tail: _*).head())
+    assert(observed == jobsDuring { multiPartition.localCheckpoint(); () })
+    // an empty frame's min/max are null, as its aggregate's are
+    assert(Checkpoints.pinObserved(multiPartition.filter("id < 0"), metrics: _*)._2.isNullAt(0))
   }
 
   test("pinCounted pins at localCheckpoint()'s default storage level") {

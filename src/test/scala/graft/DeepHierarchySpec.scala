@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.operators.{Graph, Hierarchy}
 
@@ -24,6 +26,22 @@ class DeepHierarchySpec extends SparkSpec {
     assert(flat(100L) == ((0L, 7, (0L to 6L).mkString(">") + ">100")))
     // depth histogram: one node per chain level, plus the branch at 7
     assert(flat.values.count(_._2 == 7) == 2)
+  }
+
+  test("flatten: each level is one counted pin, with no probe job and no cached edges") {
+    val edges = ((1L to 12L).map(i => (i, Some(i - 1))) :+
+      (0L, None: Option[Long]) :+ (100L, Some(6L))).toDF("child", "parent")
+    var flat: org.apache.spark.sql.DataFrame = null
+    val events = eventsDuring { flat = Hierarchy.flatten(edges, "child", "parent") }
+    val jobs = events.collect { case j: SparkListenerJobStart => j }
+    // depths 0..12, plus the empty depth-13 pin that ends the loop
+    val pins = 14
+    assert(jobs.size <= 2 * pins, s"${jobs.size} jobs: ${jobs.map(callSite)}")
+    assert(!jobs.map(callSite).exists(_.startsWith("isEmpty")), jobs.map(callSite))
+    val plans = events.collect { case e: SparkListenerSQLExecutionStart => e.physicalPlanDescription }
+    assert(plans.size == pins)
+    assert(!plans.exists(_.contains("InMemory")), "a level read cached edges")
+    assert(flat.count() == 14)
   }
 
   test("flatten: maxDepth truncates a 25-deep chain at the bound (runaway-cycle guard)") {

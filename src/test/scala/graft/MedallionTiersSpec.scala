@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{FeatureAssembly, Medallion}
@@ -42,6 +46,80 @@ class MedallionTiersSpec extends SparkSpec {
     val got = silver.select("k", "v", "sk").as[(Long, String, Long)]
       .collect().sortBy(_._1).toList
     assert(got == List((1L, "new", 1L), (2L, "only", 2L)), s"got $got")
+  }
+
+  /** silverApply's earlier form, kept as the reference: exact-row
+    * dedup, then the latest-wins window on the natural key, then the
+    * bucketed surrogate key, each over its own exchange. */
+  private def silverReference(bronze: DataFrame, naturalKeys: Seq[String],
+                              skCol: String, rangeBucket: Column): DataFrame = {
+    val keyCols = naturalKeys.map(col)
+    val wLatest = Window.partitionBy(keyCols: _*)
+      .orderBy(col("effectiveDate").desc, col("currentVersion").desc)
+    val current = bronze.distinct().withColumn("__v", row_number().over(wLatest))
+      .filter(col("__v") === 1).drop("__v")
+    val bucketed = current.withColumn("__bucket", rangeBucket)
+    val wIn = Window.partitionBy(col("__bucket")).orderBy(keyCols: _*)
+    val wRoll = Window.orderBy(col("__bucket"))
+    val offsets = bucketed.groupBy("__bucket").agg(count(lit(1)).as("__n"))
+      .withColumn("__offset",
+        coalesce(sum(lag("__n", 1).over(wRoll)).over(wRoll), lit(0L)))
+      .drop("__n")
+    bucketed
+      .withColumn("__rn", row_number().over(wIn))
+      .join(offsets, "__bucket")
+      .withColumn(skCol, (col("__offset") + col("__rn")).cast("long"))
+      .drop("__bucket", "__rn", "__offset")
+  }
+
+  test("silver over one exchange equals dedup, then latest-wins, then the bucketed key") {
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("v", StringType),
+      StructField("sourceFile", StringType),
+      StructField("currentVersion", IntegerType),
+      StructField("effectiveDate", IntegerType),
+      StructField("expirationDate", IntegerType)))
+    val cur = Medallion.FarFuture
+    val rows = Seq(
+      Row(0L, "a", "f1", 1, 20240101, cur),
+      Row(3L, "c", "f1", 1, 20240101, cur),
+      Row(3L, "c", "f1", 1, 20240101, cur), // exact duplicate
+      Row(5L, "old", "f1", 1, 20240101, 20240201),
+      Row(5L, "new", "f2", 1, 20240201, cur), // re-arrival, later date
+      Row(5L, "new", "f2", 1, 20240201, cur), // ... and its duplicate
+      Row(7L, "g", "f1", 1, 20240101, cur),
+      Row(7L, "g", "f1", 1, 20240101, cur),
+      Row(7L, "g", "f1", 1, 20240101, cur),
+      Row(9L, "i", "f2", 2, 20240101, cur),
+      Row(9L, "i-v1", "f1", 1, 20240101, cur), // same date, older version
+      Row(11L, "l", "f2", 1, 20240101, cur))
+    // the rows spread over 3 partitions, keys over buckets 0, 1 and 2
+    val bronze = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    val bucket = floor(col("k") / 4).cast("long")
+    def rowsOf(df: DataFrame) = df.select(df.columns.sorted.map(col): _*)
+      .collect().map(_.toSeq).sortBy(_.toString).toList
+    val got = rowsOf(Medallion.silverApply(bronze, Seq("k"), "sk", bucket))
+    val want = rowsOf(silverReference(bronze, Seq("k"), "sk", bucket))
+    assert(got == want, s"got $got\nwant $want")
+    assert(got.size == 6)
+  }
+
+  test("the executed silver plan moves the fact rows through one exchange") {
+    val df = Medallion.medallionSilverOrders(spark, sfDir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val payload = Set("oCustkey", "oOrderstatus", "oTotalprice", "oOrderdate",
+      "oOrderpriority", "sourceFile")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val wide = helper.collect(plan) {
+      case e: ShuffleExchangeExec if e.output.exists(a => payload(a.name)) => e
+    }
+    assert(wide.size == 1, s"exchanges carrying fact columns:\n${wide.mkString("\n")}")
+    val allColumnAggs = helper.collect(plan) {
+      case a: HashAggregateExec
+          if a.groupingExpressions.exists(g => payload(g.name)) => a
+    }
+    assert(allColumnAggs.isEmpty, s"all-column aggregates:\n${allColumnAggs.mkString("\n")}")
   }
 
   test("gold is the current-rows projection without lineage") {

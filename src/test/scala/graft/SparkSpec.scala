@@ -1,9 +1,10 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -19,23 +20,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  /** Jobs started on this thread while `work` runs. The listener bus is
+  /** Jobs started on this thread while `work` runs. */
+  def jobsDuring(work: => Unit): Int =
+    eventsDuring(work).count(_.isInstanceOf[SparkListenerJobStart])
+
+  /** Job starts and SQL execution starts of this thread while `work`
+    * runs, in the order the listener saw them. The listener bus is
     * asynchronous, so a sentinel job in its own group follows `work`:
-    * once the listener sees the sentinel start, every earlier job start
-    * has been delivered. */
-  def jobsDuring(work: => Unit): Int = {
+    * once the listener sees the sentinel start, every earlier event has
+    * been delivered. */
+  def eventsDuring(work: => Unit): Seq[SparkListenerEvent] = {
     val sc = spark.sparkContext
     val group = s"jobs-during-${java.util.UUID.randomUUID()}"
     val sentinel = s"$group-sentinel"
-    val jobs = new AtomicInteger(0)
+    val events = new ConcurrentLinkedQueue[SparkListenerEvent]()
     val sentinelSeen = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)    => jobs.incrementAndGet(); ()
+          case Some(`group`)    => events.add(j); ()
           case Some(`sentinel`) => sentinelSeen.countDown()
           case _                => ()
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) =>
+          events.add(x); ()
+        case _ => ()
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -48,8 +59,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    jobs.get()
+    events.asScala.toSeq
   }
+
+  /** The call site of a job: its result stage's name, e.g.
+    * `isEmpty at Hierarchy.scala:40`. */
+  def callSite(j: SparkListenerJobStart): String =
+    j.stageInfos.maxBy(_.stageId).name
 }
 
 object SparkSpec {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.sources.VersionedTable
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** Contracts of the versioned parquet table (the Delta-semantics
@@ -320,6 +321,27 @@ class VersionedTableSpec extends SparkSpec {
       }
     assert(liveNow.count(before.contains) == 2)
     assert(VersionedTable.readVersion(spark, t, 2L).count() == 5L)
+  }
+
+  test("pruned merge: the changeset's key range is observed in its pin's job") {
+    val t = freshTable()
+    VersionedTable.appendKeyed(spark, t,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "s"), "k")
+    VersionedTable.appendKeyed(spark, t,
+      Seq((10L, "x"), (11L, "y")).toDF("k", "s"), "k")
+    VersionedTable.appendKeyed(spark, t,
+      Seq((20L, "p")).toDF("k", "s"), "k")
+    var counts = (0, 0)
+    val events = eventsDuring {
+      val (_, rewritten, skipped) = VersionedTable.upsertPruned(spark, t,
+        Seq((11L, "Y"), (12L, "z")).toDF("k", "s"), "k")
+      counts = (rewritten, skipped)
+    }
+    assert(counts == ((1, 2)))
+    // the pin and the rewrite, and no aggregate query of the changeset
+    val plans = events.collect { case e: SparkListenerSQLExecutionStart => e.physicalPlanDescription }
+    assert(plans.size == 2, plans.mkString("\n"))
+    assert(!plans.exists(_.contains("HashAggregate")), plans.mkString("\n"))
   }
 
   test("pruned merge: stats-less groups always count as overlapping") {

@@ -4,13 +4,16 @@ print the keys whose counts moved.
 
     python3 tools/plan_exchanges.py DIR_A DIR_B
 
-Each dir holds PlanDump's `<key>_<suffix>.txt` files (`.explain("formatted")`
-of the frame a key builds, pins already run); the suffix is the last
-`_`-separated token, shared by every file of a dir. A node is counted once
-per `(N) <Name>` line of the plan's detail section (subqueries included):
-`Exchange` (shuffle) and `BroadcastExchange` separately. PlanDump writes the
-plan before it runs, so AQE's runtime changes (exchange reuse, broadcast
-conversion) are not in these counts.
+Each dir holds PlanDump's `<key>_<suffix>.txt` files (the formatted explain
+of AQE's final plan of the frame a key builds, after the frame has run; pins
+made while building it ran before, and what ran inside them is not in the
+plan); the suffix is the last `_`-separated token, shared by every file of a
+dir. A node is counted once per `(N) <Name>` line of the plan's detail
+section (subqueries included): `Exchange` (shuffle) and `BroadcastExchange`
+separately. AQE's runtime changes are in these counts: an exchange AQE ran
+once and read again is one `Exchange` plus a `ReusedExchange`, which neither
+count includes, and a join AQE turned into a broadcast join keeps the
+shuffles that ran before the switch.
 Exit status 1 if any key's shuffle-exchange count rose.
 """
 import os
